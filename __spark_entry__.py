@@ -1,7 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry`` runs the flagship extract pipeline over a deterministic synthetic
-``pages`` table (reference fixtures embedded) and returns the output
+``pages`` table (reference fixtures embedded when the reference checkout is
+present, reported in the ``fixtures_included`` column) and returns the output
 DataFrame.  ``queries``/``oracle_sql`` expose the operator inventory of
 SURVEY.md §2 over the driver-provided tables with DuckDB oracles
 (extractor_spark/spark/queries.py); probabilistic scale-path ops
@@ -42,8 +43,10 @@ BLOG_SCHEMA = {
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: synthesize pages (fixtures + boilerplate corpus) → dedup →
     salt → convert (mapInPandas) → schema extraction → typed output."""
+    from pyspark.sql import functions as F
+
     from extractor_spark.spark.pipeline import PipelineConfig, run_pipeline
-    from extractor_spark.spark.synth import write_pages
+    from extractor_spark.spark.synth import reference_fixtures_present, write_pages
 
     workdir = os.path.join(tempfile.gettempdir(), "extractor_spark_entry")
     pages_path = os.path.join(workdir, "pages.parquet")
@@ -70,6 +73,7 @@ def entry(spark: SparkSession) -> DataFrame:
         "data",
         "input_tokens",
         "output_tokens",
+        F.lit(reference_fixtures_present()).alias("fixtures_included"),
     )
 
 

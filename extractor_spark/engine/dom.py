@@ -136,10 +136,6 @@ class Element:
         idx = self.children.index(node)
         return self.children[idx + 1] if idx + 1 < len(self.children) else None
 
-    def prev_sibling(self, node):
-        idx = self.children.index(node)
-        return self.children[idx - 1] if idx > 0 else None
-
     def iter_elements(self):
         """All descendant elements, document order (self excluded)."""
         stack = list(reversed(self.children))
@@ -162,14 +158,6 @@ class Element:
 
     def __repr__(self) -> str:  # pragma: no cover - debug aid
         return f"<{self.tag} attrs={self.attrs} children={len(self.children)}>"
-
-
-def sibling_of(node):
-    """(previous, next) siblings of a node, or (None, None) if detached."""
-    parent = node.parent
-    if parent is None:
-        return None, None
-    return parent.prev_sibling(node), parent.next_sibling(node)
 
 
 # ---------------------------------------------------------------------------
@@ -198,12 +186,6 @@ def serialize_inner(element: Element) -> str:
     raw = element.tag in _RAW_TEXT_CONTAINERS
     for child in element.children:
         _serialize_node(child, out, raw)
-    return "".join(out)
-
-
-def serialize_node(node) -> str:
-    out: list[str] = []
-    _serialize_node(node, out, False)
     return "".join(out)
 
 

@@ -25,7 +25,7 @@ Design constraints:
   integer multiples of the dominant leading.
 
 Scale shape: one document per call, no global state — the Spark side maps
-this over Arrow batches of a binary column (see spark/multimodal.py); the
+this over Arrow batches (the convert stage routes PDF payloads here); the
 per-task cost is CPU-bound Python, which is exactly what the pipeline's
 explicit pre-UDF repartition is for.
 """
@@ -1199,8 +1199,7 @@ def is_pdf(data: bytes) -> bool:
     Deliberately STRICTER than the parser (PdfDocument.load tolerates
     arbitrary junk before the header): a routing sniff that matched %PDF-
     anywhere in the first KiB would classify HTML that merely MENTIONS the
-    magic as a PDF, and the convert stage and multimodal stage must agree
-    on the same payload.  Callers that know a payload is a PDF can call
+    magic as a PDF.  Callers that know a payload is a PDF can call
     pdf_to_text directly regardless of prefix junk."""
     head = data[:1024]
     if head.startswith(b"\xef\xbb\xbf"):

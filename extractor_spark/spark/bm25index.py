@@ -1,12 +1,10 @@
 """Stored BM25 index: build-once ranked-retrieval postings + pruned serving.
 
-The ranked-retrieval sibling of spark/phraseindex.py (same index-once
-serve-many amortization, same 256 term-hash bucket layout so a query's
-scan is partition-pruned at planning time).  Where the phrase index stores
-positions for exact intersection, this stores per-(term, doc) term
-frequencies plus the two corpus statistics BM25 needs (document frequency
-per term; N and avgdl), so serving a query batch costs one pruned postings
-scan + broadcast joins — never a corpus pass.
+Index once, serve many: postings live in 256 term-hash bucket directories
+so a query's scan is partition-pruned at planning time.  The index stores
+per-(term, doc) term frequencies plus the two corpus statistics BM25 needs
+(document frequency per term; N and avgdl), so serving a query batch costs
+one pruned postings scan + broadcast joins — never a corpus pass.
 
 Semantics are identical to the fused registry query
 (`queries.py:_BM25_BATCH_SPARK`: Okapi BM25, k1=1.2, b=0.75, Lucene's
@@ -21,10 +19,10 @@ see :func:`append_bm25_index`):
   _df/batch=<id>/              per-term (df, tf_max, dl_min) contributions
   _stats/batch=<id>/           1 row (n_docs, sum_dl)
 Underscore prefixes keep the side tables invisible to parquet reads of
-``path`` itself (the phraseindex convention).  Serving folds the
-vocabulary-sized side tables across batches; appends cost one pass over
-the new batch only, and re-running a batch id overwrites its partitions
-(retry-idempotent, the incdedup convention).
+``path`` itself.  Serving folds the vocabulary-sized side tables across
+batches; appends cost one pass over the new batch only, and re-running a
+batch id overwrites its partitions (retry-idempotent, the incdedup
+convention).
 
 MaxScore-style pruned serving (Turtle & Flood 1995's upper-bound idea,
 restructured as an exact TWO-PASS distributed plan rather than a
@@ -70,7 +68,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import caches
-from .phraseindex import N_TERM_BUCKETS, tokenize_expr
 
 K1 = 1.2
 B = 0.75
@@ -84,6 +81,13 @@ _ROUND_MARGIN = 1.1e-4
 _HOT_DF_FRAC = 1.0 / 16.0
 # broadcast-safety cap on the total surviving candidate set
 _MAX_CANDIDATES = 500_000
+N_TERM_BUCKETS = 256
+
+
+def tokenize_expr(col: str = "text"):
+    """The corpus tokenize used across the text operators (whitespace on
+    lowered, trimmed text) — index and query sides must split identically."""
+    return F.split(F.trim(F.lower(F.col(col))), r"\s+")
 
 
 def build_bm25_index(docs: DataFrame, path: str, n_partitions: int = 32) -> None:
@@ -170,75 +174,6 @@ def _write_side_tables(postings: DataFrame, path: str, batch_id: int, ow: str) -
         .partitionBy("batch")
         .parquet(path + "/_df")
     )
-
-
-def compact_bm25_index(spark: SparkSession, path: str, n_partitions: int = 32) -> None:
-    """Rewrite every batch into a single batch 0.  After many streaming
-    appends the index holds k small files per bucket and k side-table rows
-    per term; compaction restores the build-once layout (term-sorted row
-    groups per bucket — row-group pruning quality degrades with fragment
-    count) and TIGHTENS the MaxScore envelope back to a single fold (the
-    folded corner (max tf_max, min dl_min) across batches is looser than
-    the one-batch corner).  Postings are NOT re-tokenized — this is a pure
-    rewrite of the stored rows.  Writes to a sibling temp dir and swaps
-    (the frontier store-swap convention: the local stand-in for an atomic
-    metastore pointer flip)."""
-    import shutil
-
-    tmp = path + "__compacting"
-    shutil.rmtree(tmp, ignore_errors=True)
-    postings = spark.read.parquet(path).select(
-        "term", "doc_id", "tf", "dl", "bucket"
-    ).withColumn("batch", F.lit(0))
-    (
-        postings.repartition(n_partitions, "bucket")
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("bucket", "batch")
-        .parquet(tmp)
-    )
-    written = spark.read.parquet(tmp)
-    _write_side_tables(written, tmp, 0, "static")
-    shutil.rmtree(path)
-    shutil.move(tmp, path)
-
-
-def streaming_index_docs(
-    spark: SparkSession,
-    docs_stream_dir: str,
-    index_path: str,
-    ckpt_dir: str,
-) -> None:
-    """foreachBatch availableNow drain over a stream of (doc_id, text)
-    files: each microbatch appends its postings + side-table contributions
-    under ``batch=<microbatch id>`` via :func:`append_bm25_index` — the
-    same idempotent partition-overwrite write, so Structured Streaming's
-    replayed microbatches (post-crash) land on identical content.
-    streaming ≡ batch equality pinned in tests/test_bm25_append.py.
-    Batch ids are offset past any batches an earlier build/append/compact
-    already owns (:func:`phraseindex.stream_batch_offset` — a fresh
-    checkpoint's microbatch 0 must not overwrite batch-0 partitions it
-    did not produce)."""
-    from .phraseindex import stream_batch_offset
-
-    off = stream_batch_offset(index_path, ckpt_dir)
-
-    def handle(batch_df, batch_id: int) -> None:
-        append_bm25_index(batch_df, index_path, batch_id=int(batch_id) + off)
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_stream_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def _contrib(n_docs: float, avgdl: float):

@@ -117,85 +117,6 @@ def build_frontier(
     )
 
 
-def merge_frontier_store(store: DataFrame | None, increment: DataFrame) -> DataFrame:
-    """Upsert an increment into the accumulated frontier: one row per url,
-    keeping the best-attributed entry (priority desc nulls last, lastmod
-    desc nulls last).  The reduction is an associative lexicographic
-    argmax, so incremental merging converges to exactly the batch
-    ``build_frontier`` result regardless of how entries are split across
-    microbatches (rows tying on the full key are identical: host and rule
-    are url-derived).  At production scale this merge is a Delta/Iceberg
-    MERGE INTO keyed on url; here it is union + window-dedupe."""
-    from pyspark.sql import Window
-
-    unioned = increment if store is None else store.unionByName(increment)
-    w = Window.partitionBy("url").orderBy(
-        F.col("priority_milli").desc_nulls_last(),
-        F.col("lastmod").desc_nulls_last(),
-    )
-    return (
-        unioned.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def streaming_frontier(
-    spark,
-    sitemaps_stream_dir: str,
-    crawled_pages: DataFrame,
-    robots: DataFrame,
-    work_dir: str,
-    agent: str = "extractor-spark",
-) -> DataFrame:
-    """Incremental frontier over a STREAM of sitemap bodies (VERDICT r4
-    #8): new (host, xml) files land in ``sitemaps_stream_dir``; each
-    microbatch runs the same parse → dedupe → anti-join → robots
-    composition as ``build_frontier`` and is upserted into a persistent
-    frontier store via ``merge_frontier_store``.  availableNow drain;
-    returns the final store DataFrame.
-
-    The store swap is read-old → write-new-dir → atomic rename (the local
-    stand-in for a transactional table MERGE; the checkpoint +
-    deterministic merge make replays idempotent)."""
-    import os
-    import shutil
-
-    from . import caches
-
-    store_dir = os.path.join(work_dir, "frontier_store")
-    ckpt_dir = os.path.join(work_dir, "frontier_ckpt")
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        with caches.scope():
-            inc = build_frontier(batch_df, crawled_pages, robots, agent=agent)
-            store = (
-                spark.read.parquet(store_dir) if os.path.isdir(store_dir) else None
-            )
-            merged = merge_frontier_store(store, inc)
-            tmp_dir = f"{store_dir}.next{batch_id}"
-            merged.write.mode("overwrite").parquet(tmp_dir)
-            if os.path.isdir(store_dir):
-                shutil.rmtree(store_dir)
-            os.rename(tmp_dir, store_dir)
-
-    stream = (
-        spark.readStream.schema("host string, xml string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(sitemaps_stream_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(store_dir).orderBy(
-        F.col("priority_milli").desc_nulls_last(), "url"
-    )
-
-
 def allocate_crawl_budget(
     frontier: DataFrame, budget: int, per_host_cap: int | None = None
 ) -> DataFrame:
@@ -377,9 +298,7 @@ def build_feed_frontier(
     entries = parse_feeds(feeds)
     # Tiebreak uses only columns that SURVIVE into the output (published_s,
     # title): the output's host and rule are url-derived, so rows tying on
-    # (published_s, title) are output-identical, and the streaming store
-    # merge (merge_feed_store) can reproduce this choice exactly from
-    # output rows alone — the same argument streaming_frontier relies on.
+    # (published_s, title) are output-identical.
     dedup_w = Window.partitionBy("loc").orderBy(
         F.col("published_s").desc_nulls_last(),
         F.col("title").asc_nulls_last(),
@@ -490,80 +409,3 @@ def synth_feeds_df(
             )
         rows.append((host, body))
     return spark.createDataFrame(pd.DataFrame(rows, columns=["host", "xml"]))
-
-
-def merge_feed_store(store: DataFrame | None, increment: DataFrame) -> DataFrame:
-    """Upsert a feed-frontier increment: one row per url, keeping the
-    freshest-attributed entry (published_s desc nulls last, title asc
-    nulls last — the same total order build_feed_frontier's dedupe uses,
-    over columns present in the OUTPUT, so incremental merging converges
-    to exactly the batch result regardless of microbatch splits; rows
-    tying on the full key are output-identical because host and rule are
-    url-derived)."""
-    from pyspark.sql import Window
-
-    unioned = increment if store is None else store.unionByName(increment)
-    w = Window.partitionBy("url").orderBy(
-        F.col("published_s").desc_nulls_last(),
-        F.col("title").asc_nulls_last(),
-    )
-    return (
-        unioned.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def streaming_feed_frontier(
-    spark,
-    feeds_stream_dir: str,
-    crawled_pages: DataFrame,
-    robots: DataFrame,
-    work_dir: str,
-    agent: str = "extractor-spark",
-) -> DataFrame:
-    """Incremental feed-driven discovery over a STREAM of feed bodies —
-    the natural deployment shape (feeds announce what is NEW, so they
-    arrive continuously): new (host, xml) files land in
-    ``feeds_stream_dir``; each microbatch runs the same parse → dedupe →
-    anti-join → robots composition as ``build_feed_frontier`` and is
-    upserted into a persistent store via ``merge_feed_store``.
-    availableNow drain; returns the final store, freshest-first.  Same
-    read-old → write-new → atomic-rename store swap as
-    ``streaming_frontier`` (the local stand-in for MERGE INTO)."""
-    import os
-    import shutil
-
-    from . import caches
-
-    store_dir = os.path.join(work_dir, "feed_store")
-    ckpt_dir = os.path.join(work_dir, "feed_ckpt")
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        with caches.scope():
-            inc = build_feed_frontier(batch_df, crawled_pages, robots, agent=agent)
-            store = (
-                spark.read.parquet(store_dir) if os.path.isdir(store_dir) else None
-            )
-            merged = merge_feed_store(store, inc)
-            tmp_dir = f"{store_dir}.next{batch_id}"
-            merged.write.mode("overwrite").parquet(tmp_dir)
-            if os.path.isdir(store_dir):
-                shutil.rmtree(store_dir)
-            os.rename(tmp_dir, store_dir)
-
-    stream = (
-        spark.readStream.schema("host string, xml string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feeds_stream_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(store_dir).orderBy(
-        F.col("published_s").desc_nulls_last(), "url"
-    )

@@ -26,8 +26,7 @@ shuffle-free on the store side; here they are plain appended parquet.
 The correctness gate (tests/test_incremental_dedup.py) replays the same
 batches through a from-scratch reference that rebuilds the accumulated
 corpus per step with the identical SQL — so the persisted-store path is
-pinned to introduce no loss or corruption — plus a planted near-copy test
-and a streaming (foreachBatch availableNow) ≡ batch-loop equality.
+pinned to introduce no loss or corruption — plus a planted near-copy test.
 
 No reference analog (lightfeed/extractor has no dedup); parameters and
 star/verify conventions follow `curate.py`.
@@ -43,23 +42,6 @@ from pyspark.sql import functions as F
 BANDS_SUBDIR = "bands"
 SHINGLES_SUBDIR = "shingles"
 
-# Same signature construction as the curate funnel: 64 MinHash values as a
-# pure array expression (no 64-way explode), 16 bands of 4.  The SQL form
-# is kept for the from-scratch reference in tests/test_incremental_dedup.py
-# (batch_shingles_and_bands builds the identical expressions with the
-# DataFrame API — see its docstring for why views are unusable here).
-_BATCH_BANDS_SQL = """
-SELECT url, b.pos AS band_idx,
-       xxhash64(sig[b.pos * 4], sig[b.pos * 4 + 1], sig[b.pos * 4 + 2], sig[b.pos * 4 + 3]) AS band_hash
-FROM (
-  SELECT url,
-         transform(sequence(0, 63),
-                   seed -> array_min(transform(hs, h -> xxhash64(h, seed)))) AS sig
-  FROM {sh_view}
-)
-LATERAL VIEW posexplode(sequence(0, 15)) b AS pos, val
-"""
-
 
 def batch_shingles_and_bands(
     spark: SparkSession, docs: DataFrame
@@ -68,14 +50,14 @@ def batch_shingles_and_bands(
     tokens yield no shingles and therefore no bands: they can never match
     and are skipped by the index entirely.
 
-    Built with DataFrame expressions, NOT temp views: inside a
-    foreachBatch handler the batch frame belongs to the microbatch's
-    CLONED session, so a view registered on it is invisible to the outer
-    session's sql() — which then silently resolves a stale same-named view
-    from an earlier batch run (the bug the streaming equality test
-    caught).  The expressions are verbatim from curate.py's templates, and
-    the from-scratch reference test still runs those templates, pinning
-    the two forms equal."""
+    The signature is the curate funnel's: 64 MinHash values as a pure
+    array expression (no 64-way explode), 16 bands of 4.  Built with
+    DataFrame expressions, NOT temp views: a view registered on a
+    foreachBatch batch frame lands in the microbatch's CLONED session,
+    invisible to the outer session's sql(), which then silently resolves
+    a stale same-named view.  The expressions are verbatim from
+    curate.py's templates, and the from-scratch reference test runs the
+    SQL form, pinning the two forms equal."""
     sh = (
         docs.selectExpr("url", "split(trim(text), '\\\\s+') AS w")
         .filter("size(w) >= 3")
@@ -244,107 +226,3 @@ def dedup_batch(
     finally:
         batch_sh.unpersist()
         batch_bands.unpersist()
-
-
-def streaming_dedup(
-    spark: SparkSession,
-    docs_stream_dir: str,
-    work_dir: str,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """foreachBatch availableNow drain over a stream of (url, text) files:
-    each microbatch runs ``dedup_batch`` against the growing store and
-    appends its verdicts to ``work_dir/verdicts``.  Returns the union of
-    all verdicts.  Equality vs the batch loop is pinned in
-    tests/test_incremental_dedup.py (same chunking on both sides — the
-    strictly-earlier-batches semantics makes chunking part of the
-    contract, exactly as in a real crawl's arrival order)."""
-    store_dir = os.path.join(work_dir, "incdedup_store")
-    ckpt_dir = os.path.join(work_dir, "incdedup_ckpt")
-    verdicts_dir = os.path.join(work_dir, "verdicts")
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        from . import caches
-
-        with caches.scope():
-            out = dedup_batch(
-                spark, store_dir, batch_df, threshold=threshold, batch_id=batch_id
-            )
-            # verdicts idempotent the same way: per-batch partition overwrite
-            out.write.mode("overwrite").parquet(
-                os.path.join(verdicts_dir, f"batch={int(batch_id)}")
-            )
-            out.unpersist()
-
-    stream = (
-        spark.readStream.schema("url string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_stream_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(verdicts_dir)
-
-
-def streaming_source_counts(
-    spark: SparkSession,
-    docs_stream_dir: str,
-    work_dir: str,
-) -> DataFrame:
-    """Incremental per-(source, token) counts over a stream of (source,
-    text) docs — the maintained statistic behind source_drift_kl (corpus
-    monitoring at ingest time).  Counts are ASSOCIATIVE, so merging each
-    microbatch's partial counts into the store by summation converges to
-    exactly the batch aggregation regardless of chunking — the same
-    argument as merge_frontier_store's argmax (frontier.py), with sum in
-    place of argmax.  Store swap is write-next → atomic rename, as there.
-
-    Returns the final (source, w, c) store; feeding it to the
-    source_drift_kl SQL gives bit-identical KL to the batch query
-    (pinned in tests/test_incremental_dedup.py)."""
-    import shutil
-
-    store_dir = os.path.join(work_dir, "srccnt_store")
-    ckpt_dir = os.path.join(work_dir, "srccnt_ckpt")
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        inc = (
-            batch_df.selectExpr(
-                "source", "explode(split(trim(lower(text)), '\\\\s+')) AS w"
-            )
-            .groupBy("source", "w")
-            .agg(F.count("*").cast("bigint").alias("c"))
-        )
-        if os.path.isdir(store_dir):
-            merged = (
-                spark.read.parquet(store_dir)
-                .unionByName(inc)
-                .groupBy("source", "w")
-                .agg(F.sum("c").cast("bigint").alias("c"))
-            )
-        else:
-            merged = inc
-        tmp_dir = f"{store_dir}.next{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp_dir)
-        if os.path.isdir(store_dir):
-            shutil.rmtree(store_dir)
-        os.rename(tmp_dir, store_dir)
-
-    stream = (
-        spark.readStream.schema("source string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_stream_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(store_dir)

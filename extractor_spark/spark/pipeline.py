@@ -450,19 +450,3 @@ def _run_wave(
         .withColumn("dedup_mode", F.lit(conf.dedup_mode))
     )
     manifest_rows.write.mode("append").parquet(manifest_path)
-
-
-def summarize_metrics(spark: SparkSession, output_path: str) -> DataFrame:
-    """Host-level metric rollup over the output table (engineered agg op)."""
-    out = spark.read.parquet(output_path)
-    return (
-        out.withColumn("url_host", F.expr("parse_url(url, 'HOST')"))
-        .groupBy("url_host")
-        .agg(
-            F.count("*").alias("docs"),
-            F.sum("html_bytes").alias("html_bytes"),
-            F.sum("markdown_chars").alias("markdown_chars"),
-            F.sum("boilerplate_bytes_removed").alias("boilerplate_bytes_removed"),
-        )
-        .orderBy(F.col("docs").desc())
-    )

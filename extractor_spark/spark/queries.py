@@ -4412,11 +4412,7 @@ def leakage_split_frame(labels: DataFrame) -> DataFrame:
 # corpus itself (tokens 5..7 of every 50th doc), aggregated to
 # per-(phrase, doc) hit counts — one corpus pass, one broadcast join, one
 # aggregation shuffle, positional ADJACENCY enforced by construction.
-# The general-k / stored-index production path is spark/phraseindex.py
-# (build once term-clustered, serve many with a pushdown-pruned scan);
-# tests/test_phrase_search.py pins that path against a brute-force twin
-# and pins this query's fused form equal to serving the same phrases
-# from a stored index.
+# tests/test_queries_oracle.py pins it against its DuckDB twin.
 _PHRASE_SPARK = """
 WITH toks AS (
   SELECT doc_id, split(trim(lower(text)), '\\\\s+') AS t FROM documents

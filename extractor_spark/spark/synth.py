@@ -4,7 +4,8 @@ The authoritative input shape (BASELINE.json input_hint):
     pages(url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING)
 
 Rows come from three sources, all seeded (no wall-clock, no global RNG):
-  1. the reference's HTML fixtures verbatim (byte-identity anchors),
+  1. the reference's HTML fixtures verbatim (byte-identity anchors), only
+     when the reference checkout is present (``reference_fixtures_present``),
   2. unit-literal micro-pages from converters.test.ts,
   3. templated boilerplate-heavy pages at arbitrary scale, generated
      *distributed* (spark.range → mapInPandas) so the same generator scales
@@ -17,7 +18,9 @@ Rows come from three sources, all seeded (no wall-clock, no global RNG):
 from __future__ import annotations
 
 import datetime
+import functools
 import hashlib
+import warnings
 from pathlib import Path
 from typing import Iterator
 
@@ -202,10 +205,33 @@ def _synth_row(page_id: int, variant: int = 0) -> dict:
     }
 
 
+@functools.cache
+def _reference_fixture_html() -> dict[str, str]:
+    """Fixture name → html, read once; empty (with one warning) when the
+    reference checkout is absent.  No other pages stand in for them."""
+    if not _FIXTURE_DIR.is_dir():
+        warnings.warn(
+            f"reference fixtures not found at {_FIXTURE_DIR}; "
+            "synthetic pages are built without them",
+            stacklevel=2,
+        )
+        return {}
+    return {name: (_FIXTURE_DIR / f"{name}.html").read_text() for name in FIXTURE_URLS}
+
+
+def reference_fixtures_present() -> bool:
+    return bool(_reference_fixture_html())
+
+
 def fixture_rows() -> list[dict]:
+    """The reference fixture pages (when present), then the UNIT_PAGES
+    literals (always)."""
     rows = []
+    html_by_name = _reference_fixture_html()
     for i, (name, url) in enumerate(sorted(FIXTURE_URLS.items())):
-        html = (_FIXTURE_DIR / f"{name}.html").read_text()
+        if name not in html_by_name:
+            continue
+        html = html_by_name[name]
         rows.append(
             {
                 "url": url,

@@ -678,7 +678,7 @@ def spam_mass_ranks(
     base = (1.0 - damping) / n
     t_edges, t_nodes, seed_df, n_seeds, t_parts = _trustrank_prep(edges, seeds)
     if n_seeds == 0:
-        t_edges.unpersist()
+        # t_edges is p_edges' cache; _pagerank_loop releases it when done
         with scoped_loop_conf(spark, p_parts, codegen=False):
             pr = _pagerank_loop(
                 spark, p_edges, p_nodes, n, p_parts, base, damping, max_iter, tol

@@ -6,8 +6,7 @@ hostgraph_hits, embedding_decontaminate) well past the driver gates.
   every base doc has ~2000 copies, so query terms match tens of thousands
   of docs).  The probe uses a 1-in-5000 query predicate (200 queries at
   1M docs) instead of the registry's 1-in-50: a 20k-query batch over a
-  2000x-duplicated corpus multiplies scored rows ~40x for no extra signal
-  (same lesson as the phrase-index worst case in spark/phraseindex.py).
+  2000x-duplicated corpus multiplies scored rows ~40x for no extra signal.
 - Zipf BM25 (default 500k docs, 200k vocab, 100 mixed rare+stopword
   queries): the realistic web regime, where MaxScore pruned serving
   (spark/bm25index.py) should beat the single-pass plan — stopwords own
@@ -56,7 +55,11 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from extractor_spark.spark.bm25index import bm25_search_index, build_bm25_index
+    from extractor_spark.spark.bm25index import (
+        bm25_search_index,
+        build_bm25_index,
+        tokenize_expr,
+    )
     from extractor_spark.spark.queries import release_query_caches
     from extractor_spark.spark.session import get_spark
 
@@ -88,8 +91,6 @@ def main() -> None:
         out["bm25_s"] = round(time.time() - t0, 2)
 
         # ---- stored-index BM25: build once, serve the same query batch ---
-        from extractor_spark.spark.phraseindex import tokenize_expr
-
         idx_path = tempfile.mkdtemp(prefix="bm25idx_") + "/idx"
         t0 = time.time()
         build_bm25_index(docs.select("doc_id", "text"), idx_path)

@@ -28,7 +28,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def _queries_for(spark, docs):
-    from extractor_spark.spark.phraseindex import tokenize_expr
+    from extractor_spark.spark.bm25index import tokenize_expr
 
     rows = (
         docs.select("doc_id", tokenize_expr().alias("t"))
@@ -140,123 +140,6 @@ def test_maxscore_pruning_exact_on_appended_index(spark, tmp_path):
         # exact equality of the rounded scores (see test_bm25_maxscore)
         assert got[k] == want[k], k
     assert stats["pruned_queries"] >= 4, stats
-
-
-def test_streaming_index_equals_batch_appends(spark, docs, tmp_path):
-    """Structured-Streaming maintenance ≡ the batch append loop: one doc
-    file per microbatch (maxFilesPerTrigger=1), served results identical
-    to a from-scratch build over the union."""
-    import os
-
-    from extractor_spark.spark.bm25index import streaming_index_docs
-
-    stream_dir = str(tmp_path / "stream_in")
-    os.makedirs(stream_dir)
-    # three disjoint doc files, written as separate parquet FILES inside
-    # the stream dir (driver tables are single files; streams need dirs)
-    for i in range(3):
-        docs.where(f"doc_id % 3 = {i}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / f"part{i}"))
-        import glob
-        import shutil
-
-        src = glob.glob(str(tmp_path / f"part{i}" / "*.parquet"))[0]
-        shutil.copy(src, os.path.join(stream_dir, f"docs_{i}.parquet"))
-
-    sidx = str(tmp_path / "sidx")
-    streaming_index_docs(
-        spark, stream_dir, sidx, ckpt_dir=str(tmp_path / "ckpt")
-    )
-    scratch = str(tmp_path / "scratch2")
-    build_bm25_index(docs, scratch)
-    queries = _queries_for(spark, docs)
-    got = _rows(bm25_search_index(spark, sidx, queries, topk=10))
-    release_query_caches()
-    want = _rows(bm25_search_index(spark, scratch, queries, topk=10))
-    release_query_caches()
-    assert got.keys() == want.keys() and got
-    for k in want:
-        assert abs(got[k] - want[k]) < 1e-9, k
-    # the stream produced one batch per file
-    batches = sorted(
-        r["batch"]
-        for r in spark.read.parquet(sidx + "/_stats").select("batch").collect()
-    )
-    assert batches == [0, 1, 2]
-
-
-def test_compaction_preserves_serving_and_merges_batches(spark, docs, tmp_path):
-    from extractor_spark.spark.bm25index import compact_bm25_index
-
-    inc = str(tmp_path / "cmp")
-    build_bm25_index(docs.where("doc_id % 3 = 0"), inc)
-    append_bm25_index(docs.where("doc_id % 3 = 1"), inc, batch_id=1)
-    append_bm25_index(docs.where("doc_id % 3 = 2"), inc, batch_id=2)
-    queries = _queries_for(spark, docs)
-    before = _rows(bm25_search_index(spark, inc, queries, topk=10))
-    release_query_caches()
-    n_postings = spark.read.parquet(inc).count()
-    compact_bm25_index(spark, inc)
-    # one batch left, same postings, identical served results
-    assert sorted(
-        r["batch"]
-        for r in spark.read.parquet(inc + "/_stats").select("batch").collect()
-    ) == [0]
-    assert spark.read.parquet(inc).count() == n_postings
-    assert (
-        spark.read.parquet(inc).select("batch").distinct().collect()[0]["batch"] == 0
-    )
-    after = _rows(bm25_search_index(spark, inc, queries, topk=10))
-    release_query_caches()
-    assert after == before
-
-
-def test_streaming_fresh_checkpoint_offsets_past_existing_batches(
-    spark, docs, tmp_path
-):
-    """Microbatch ids are checkpoint-scoped and restart at 0 — a stream
-    started with a FRESH checkpoint against an index that already holds
-    batch 0 must append PAST it (stream_batch_offset), never silently
-    overwrite it via the idempotent partition-overwrite convention."""
-    import glob
-    import os
-    import shutil
-
-    from extractor_spark.spark.bm25index import streaming_index_docs
-
-    idx = str(tmp_path / "idx")
-    build_bm25_index(docs.where("doc_id % 3 = 0"), idx)  # owns batch 0
-    stream_dir = str(tmp_path / "stream_in")
-    os.makedirs(stream_dir)
-    for i in (1, 2):
-        part = str(tmp_path / f"p{i}")
-        docs.where(f"doc_id % 3 = {i}").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(part)
-        shutil.copy(
-            glob.glob(part + "/*.parquet")[0],
-            os.path.join(stream_dir, f"docs_{i}.parquet"),
-        )
-    streaming_index_docs(
-        spark, stream_dir, idx, ckpt_dir=str(tmp_path / "fresh_ckpt")
-    )
-    batches = sorted(
-        r["batch"]
-        for r in spark.read.parquet(idx + "/_stats").select("batch").collect()
-    )
-    assert batches == [0, 1, 2]  # batch 0 untouched, stream landed past it
-    # served results over the merged index ≡ a from-scratch build
-    scratch = str(tmp_path / "scratch")
-    build_bm25_index(docs, scratch)
-    queries = _queries_for(spark, docs)
-    got = _rows(bm25_search_index(spark, idx, queries, topk=10))
-    release_query_caches()
-    want = _rows(bm25_search_index(spark, scratch, queries, topk=10))
-    release_query_caches()
-    assert got.keys() == want.keys() and got
-    for k in want:
-        assert abs(got[k] - want[k]) < 1e-9, k
 
 
 def test_legacy_side_tables_fall_back_to_full_scoring(spark, docs, tmp_path):

@@ -29,7 +29,7 @@ def bm25_idx(spark, tmp_path_factory):
 def _registry_queries(spark, docs):
     """The fused SQL's deterministic query set: distinct tokens 5..7 of
     every 50th doc with ≥7 tokens, query_id = doc_id."""
-    from extractor_spark.spark.phraseindex import tokenize_expr
+    from extractor_spark.spark.bm25index import tokenize_expr
 
     rows = (
         docs.select("doc_id", tokenize_expr().alias("t"))

@@ -240,56 +240,3 @@ def test_feed_frontier_matches_set_algebra_twin(spark):
     for xml in bodies.values():
         locs.extend(e.loc for e in parse_feed(xml))
     assert len(locs) > len(set(locs))
-
-
-def test_streaming_feed_frontier_equals_batch(spark, tmp_path):
-    """Replay the synth feeds as a file stream (one feed body per
-    microbatch): the incremental store after the availableNow drain must
-    equal the batch build_feed_frontier over the full input, row for row
-    — merge_feed_store's (published_s desc, title asc) argmax is
-    associative and uses only output-visible columns, so the microbatch
-    split must not be observable (cross-posted locs land in a LATER
-    host's feed, crossing batch boundaries)."""
-    from pyspark.sql import functions as F
-
-    from extractor_spark.spark.frontier import (
-        build_feed_frontier,
-        streaming_feed_frontier,
-        synth_feeds_df,
-    )
-    from extractor_spark.spark.queries import _webgraph_pages
-    from extractor_spark.spark.robots import synth_robots_df
-
-    pages = _webgraph_pages(spark)
-    hp = [
-        (r["host"], r["url"])
-        for r in pages.select(
-            F.lower(F.parse_url("url", F.lit("HOST"))).alias("host"), "url"
-        ).collect()
-    ]
-    hosts = sorted({h for h, _ in hp})
-    known: dict = {}
-    for h, u in sorted(hp):
-        known.setdefault(h, [])
-        if len(known[h]) < 8:
-            known[h].append(u)
-    feeds = synth_feeds_df(spark, hosts, known=known)
-    robots = synth_robots_df(spark, hosts)
-
-    want = [
-        tuple(r)
-        for r in build_feed_frontier(feeds, pages, robots, agent="extractor-spark")
-        .collect()
-    ]
-
-    stream_dir = str(tmp_path / "feed_stream")
-    for r in feeds.collect():
-        spark.createDataFrame(
-            [(r["host"], r["xml"])], "host string, xml string"
-        ).coalesce(1).write.mode("append").parquet(stream_dir)
-    got_df = streaming_feed_frontier(
-        spark, stream_dir, pages, robots, work_dir=str(tmp_path / "work")
-    )
-    got = [tuple(r) for r in got_df.collect()]
-    assert sorted(got, key=repr) == sorted(want, key=repr)
-    assert len({u for (u, *_rest) in got}) == len(got)  # one row per url

@@ -6,8 +6,6 @@
    matches (no store, no incremental code, just the SQL templates).
 2. Planted near-copy: a batch-2 doc that is a near-copy of a batch-1 doc
    is flagged with the right attribution; a fresh doc is not.
-3. Streaming (foreachBatch availableNow) ≡ the batch loop on the same
-   chunking.
 """
 
 import os
@@ -18,6 +16,20 @@ import pytest
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
+
+# SQL form of incdedup.batch_shingles_and_bands (64-perm MinHash signature as
+# an array expression, 16 bands of 4) for the one-shot reference
+_BATCH_BANDS_SQL = """
+SELECT url, b.pos AS band_idx,
+       xxhash64(sig[b.pos * 4], sig[b.pos * 4 + 1], sig[b.pos * 4 + 2], sig[b.pos * 4 + 3]) AS band_hash
+FROM (
+  SELECT url,
+         transform(sequence(0, 63),
+                   seed -> array_min(transform(hs, h -> xxhash64(h, seed)))) AS sig
+  FROM {sh_view}
+)
+LATERAL VIEW posexplode(sequence(0, 15)) b AS pos, val
+"""
 
 
 @pytest.fixture(scope="module")
@@ -52,7 +64,6 @@ def _run_incremental(spark, docs, n_batches=3, threshold=0.8):
 
 def test_incremental_matches_from_scratch_reference(spark):
     from extractor_spark.spark.curate import _SHINGLE_SETS_TMPL
-    from extractor_spark.spark.incdedup import _BATCH_BANDS_SQL
 
     docs = _corpus(spark)
     got = _run_incremental(spark, docs)
@@ -122,71 +133,6 @@ def test_planted_near_copy_flagged(spark):
     assert got["b1"] == (True, "a1")
     assert got["b2"] == (False, None)
     assert got["c1"] == (True, "a1")
-
-
-def test_streaming_equals_batch_loop(spark, tmp_path):
-    from extractor_spark.spark.incdedup import streaming_dedup
-
-    docs = _corpus(spark)
-    batch_rows = _run_incremental(spark, docs)
-
-    stream_dir = os.path.join(str(tmp_path), "docs_stream")
-    os.makedirs(stream_dir)
-    # one parquet FILE per batch, written in arrival order (the file
-    # source picks them up one per microbatch via maxFilesPerTrigger=1)
-    for b in range(3):
-        part_dir = os.path.join(str(tmp_path), f"part{b}")
-        docs.filter(F.col("b") == b).select("url", "text").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(part_dir)
-        src = next(
-            f for f in os.listdir(part_dir) if f.endswith(".parquet")
-        )
-        shutil.copy(
-            os.path.join(part_dir, src), os.path.join(stream_dir, f"batch_{b}.parquet")
-        )
-
-    out = streaming_dedup(spark, stream_dir, os.path.join(str(tmp_path), "work"))
-    stream_rows = {r["url"]: (r["is_dup"], r["dup_of"]) for r in out.collect()}
-    assert stream_rows == batch_rows
-
-
-def test_streaming_source_counts_match_batch_and_kl(spark, tmp_path):
-    """Counts are associative: the streamed (source, w, c) store equals the
-    one-shot batch aggregation exactly, and feeding the store to the KL
-    SQL reproduces the batch source_drift_kl rows bit-for-bit."""
-    from extractor_spark.spark.incdedup import streaming_source_counts
-    from extractor_spark.spark.queries import _SOURCE_KL_SC_SQL, _SOURCE_KL_SPARK, _views
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").selectExpr(
-        "source", "text", "pmod(doc_id, 3) AS b"
-    )
-    stream_dir = os.path.join(str(tmp_path), "docs_stream")
-    os.makedirs(stream_dir)
-    for b in range(3):
-        part_dir = os.path.join(str(tmp_path), f"part{b}")
-        docs.filter(F.col("b") == b).select("source", "text").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(part_dir)
-        src = next(f for f in os.listdir(part_dir) if f.endswith(".parquet"))
-        shutil.copy(
-            os.path.join(part_dir, src), os.path.join(stream_dir, f"chunk_{b}.parquet")
-        )
-
-    store = streaming_source_counts(spark, stream_dir, os.path.join(str(tmp_path), "w"))
-
-    _views(spark, SF_DIR)
-    batch_counts = spark.sql(_SOURCE_KL_SC_SQL)
-    got = {(r["source"], r["w"]): r["c"] for r in store.collect()}
-    want = {(r["source"], r["w"]): r["c"] for r in batch_counts.collect()}
-    assert got == want
-
-    # KL from the streamed store == the batch query rows exactly
-    batch_counts.createOrReplaceTempView("source_kl_sc")
-    batch_kl = {tuple(r) for r in spark.sql(_SOURCE_KL_SPARK).collect()}
-    store.createOrReplaceTempView("source_kl_sc")
-    stream_kl = {tuple(r) for r in spark.sql(_SOURCE_KL_SPARK).collect()}
-    assert stream_kl == batch_kl
 
 
 def test_batch_replay_is_idempotent(spark):

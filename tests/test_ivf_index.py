@@ -84,36 +84,3 @@ def test_search_recall_vs_exact(spark, index):
     got_ids = {r["vec_id"] for r in got}
     recall = len(exact_ids & got_ids) / 10
     assert recall >= 0.75, f"IVF index recall {recall}"
-
-
-def test_multimodal_features_feed_ivf_index(spark, tmp_path):
-    """Composition: multimodal feature vectors (Arrow-batched extraction over
-    binary payloads) are a valid embeddings input for the IVF index —
-    media retrieval over the same ANN infrastructure as text embeddings."""
-    import pandas as pd
-
-    from extractor_spark.spark.ivf import build_index, search
-    from extractor_spark.spark.multimodal import MEDIA_SCHEMA, feature_extract_stage
-
-    rows = [
-        {
-            "media_id": i,
-            "url": f"https://m.test/{i}.bin",
-            "payload": bytes([i % 251]) * (20 + i % 7),
-            "meta": None,
-        }
-        for i in range(120)
-    ]
-    media = spark.createDataFrame(pd.DataFrame(rows), schema=MEDIA_SCHEMA)
-    emb = feature_extract_stage(media, dim=16).selectExpr(
-        "media_id AS vec_id", "CAST(features AS array<double>) AS embedding"
-    )
-
-    out = str(tmp_path / "media_index")
-    stats = build_index(spark, emb, out, k=4, iters=3, train_fraction=1.0)
-    assert stats["rows"] == 120 and stats["cells"] > 1
-
-    q = emb.where("vec_id = 0").first()["embedding"]
-    hits = search(spark, out, q, nprobe=4, topk=5, exclude_vec_id=0).collect()
-    assert len(hits) == 5
-    assert all(h["cos_sim"] is not None for h in hits)

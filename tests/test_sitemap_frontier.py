@@ -158,62 +158,6 @@ def test_frontier_matches_set_algebra_twin(spark):
     assert key == sorted(key)
 
 
-def test_streaming_frontier_equals_batch(spark, tmp_path):
-    """Replay the synth sitemaps as a file stream (one sitemap file per
-    microbatch): the incremental store after the availableNow drain must
-    equal the batch build_frontier over the full input, row for row —
-    the merge reduction is an associative argmax, so the split into
-    microbatches must not be observable (duplicate locs cross batch
-    boundaries: the cross-submitted dup lands in the NEXT host's
-    sitemap)."""
-    from pyspark.sql import functions as F
-
-    from extractor_spark.spark.frontier import (
-        build_frontier,
-        streaming_frontier,
-        synth_sitemaps_df,
-    )
-    from extractor_spark.spark.queries import _webgraph_pages
-    from extractor_spark.spark.robots import synth_robots_df
-
-    pages = _webgraph_pages(spark)
-    hp = [
-        (r["host"], r["url"])
-        for r in pages.select(
-            F.lower(F.parse_url("url", F.lit("HOST"))).alias("host"), "url"
-        ).collect()
-    ]
-    hosts = sorted({h for h, _ in hp})
-    known: dict = {}
-    for h, u in sorted(hp):
-        known.setdefault(h, [])
-        if len(known[h]) < 8:
-            known[h].append(u)
-    sitemaps = synth_sitemaps_df(spark, hosts, known=known)
-    robots = synth_robots_df(spark, hosts)
-
-    want = [
-        tuple(r)
-        for r in build_frontier(sitemaps, pages, robots, agent="extractor-spark")
-        .orderBy(F.col("priority_milli").desc_nulls_last(), "url")
-        .collect()
-    ]
-
-    stream_dir = str(tmp_path / "sitemap_stream")
-    rows = sitemaps.collect()
-    # one file per sitemap body + maxFilesPerTrigger=1 → one host per batch
-    for i, r in enumerate(rows):
-        spark.createDataFrame(
-            [(r["host"], r["xml"])], "host string, xml string"
-        ).coalesce(1).write.mode("append").parquet(stream_dir)
-    got_df = streaming_frontier(
-        spark, stream_dir, pages, robots, work_dir=str(tmp_path / "work")
-    )
-    got = [tuple(r) for r in got_df.collect()]
-    assert sorted(got, key=repr) == sorted(want, key=repr)
-    assert len({u for (u, *_rest) in got}) == len(got)  # one row per url
-
-
 def test_crawl_budget_allocation_matches_pandas_twin(spark):
     """allocate_crawl_budget vs an independent pure-Python allocator over
     the same frontier rows: exact (url, host, priority, quota, slot)

@@ -13,7 +13,6 @@ from extractor_spark.spark.pipeline import (
     PipelineConfig,
     dedup_latest_per_url,
     run_pipeline,
-    summarize_metrics,
 )
 from extractor_spark.spark.stages import convert_stage, extract_stage
 from extractor_spark.spark.synth import FIXTURE_URLS, build_pages_df
@@ -268,18 +267,6 @@ def test_pipeline_survives_garbage_pages(spark, tmp_path):
     # every row either converted or carries an error, never both-null
     for r in output.values():
         assert (r["markdown"] is not None) or (r["convert_error"] is not None)
-
-
-def test_metrics_rollup(spark, pages_path, tmp_path):
-    out_dir = str(tmp_path / "out_metrics")
-    run_pipeline(
-        spark,
-        PipelineConfig(pages_path=pages_path, output_path=out_dir, n_buckets=4),
-    )
-    rollup = summarize_metrics(spark, out_dir)
-    rows = rollup.collect()
-    assert len(rows) > 1
-    assert rows[0]["docs"] >= rows[-1]["docs"]  # ordered by docs desc
 
 
 def test_manifest_identity_and_per_run_totals(spark, pages_path, tmp_path):

@@ -485,6 +485,39 @@ def test_trustrank_seeds_absent_from_graph(spark):
     assert trustrank(edf, ["zz.test"], max_iter=5).count() == 0
 
 
+def test_spam_mass_seeds_absent_runs_upstream_once(spark):
+    """No seed in the graph: spam_mass_ranks runs PageRank alone, and the
+    edge cache both loop preps share must survive into that loop — the
+    caller's upstream edge plan (here a counting UDF) runs exactly once."""
+    from pyspark.sql import functions as F
+
+    from extractor_spark.spark.webgraph import spam_mass_ranks
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def counted(n):
+        calls.add(1)
+        return n
+
+    pairs = [
+        ("a.org", "b.org", 1),
+        ("b.org", "c.org", 2),
+        ("c.org", "a.org", 1),
+        ("a.org", "c.org", 3),
+    ]
+    edf = spark.createDataFrame(
+        pairs, "src_host string, dst_host string, n int"
+    ).select("src_host", "dst_host", F.udf(counted, "int")("n").alias("n_links"))
+    pr, tr = spam_mass_ranks(edf, ["zz.test"], max_iter=20, tol=0.0)
+    got = {r["host"]: r["rank"] for r in pr.collect()}
+    assert tr.count() == 0
+    release_query_caches()
+    assert calls.value == len(pairs)
+    want = numpy_pagerank({(s, d): n for s, d, n in pairs}, iters=20)
+    for h in want:
+        assert abs(got[h] - want[h]) < 1e-12, h
+
+
 def test_spam_mass_query_wrapper(spark):
     q = QUERIES["hostgraph_spam_mass"][0]
     df = q(spark, "/root/testdata/sf0.001")
