@@ -97,14 +97,7 @@ def learn_bpe(docs: DataFrame, n_merges: int = 24) -> list[tuple[int, str, str, 
         .agg(F.count("*").alias("cnt"))
         .select("cnt", _char_syms(F.col("word")).alias("sym"))
     )
-    before = caches.persistent_ids(sc)
-    state = vocab.localCheckpoint(eager=False)
-    cur_handles = caches.checkpoint_handles_since(sc, before)
-    # two-generation handle ledger (pagerank protocol): a round's argmax
-    # MATERIALIZES the current checkpoint, which still READS the previous
-    # one — so the grandparent generation is the oldest releasable set,
-    # and peak symbol-table storage is exactly two rounds
-    grand_handles: list = []
+    state, cur_handle = caches.local_checkpoint(vocab, eager=False)
 
     # r6: the merge loop's shuffle width follows the vocabulary size
     # (tuning.py) — the count below materializes the initial checkpoint,
@@ -120,14 +113,17 @@ def learn_bpe(docs: DataFrame, n_merges: int = 24) -> list[tuple[int, str, str, 
 
     merges: list[tuple[int, str, str, int]] = []
     with scoped_loop_conf(spark, n_parts):
-        merges = _learn_bpe_loop(
-            sc, state, cur_handles, grand_handles, n_merges, caches
-        )
+        merges = _learn_bpe_loop(state, cur_handle, n_merges, caches)
     return merges
 
 
-def _learn_bpe_loop(sc, state, cur_handles, grand_handles, n_merges, caches):
+def _learn_bpe_loop(state, cur_handle, n_merges, caches):
     merges: list[tuple[int, str, str, int]] = []
+    # two-generation handle ledger (pagerank protocol): a round's argmax
+    # MATERIALIZES the current checkpoint, which still READS the previous
+    # one — so the grandparent generation is the oldest releasable one,
+    # and peak symbol-table storage is exactly two rounds
+    grand_handle = None
     # loop-invariant Columns hoisted out of the rounds (r6): Columns are
     # immutable and reusable across DataFrames, and each F.* call is a py4j
     # round-trip — only the merge fold depends on the round's argmax
@@ -146,9 +142,9 @@ def _learn_bpe_loop(sc, state, cur_handles, grand_handles, n_merges, caches):
         pairs = state.select("cnt", c_pairs).groupBy(c_l, c_r).agg(c_n)
         # the ONE action of the round: materializes state's checkpoint
         best = pairs.orderBy(c_order, "l", "r").limit(1).collect()
-        for h in grand_handles:
-            h.unpersist()
-        grand_handles = []
+        if grand_handle is not None:
+            grand_handle.unpersist()
+            grand_handle = None
         if not best:
             break
         left, right, n = best[0]["l"], best[0]["r"], int(best[0]["n"])
@@ -158,16 +154,12 @@ def _learn_bpe_loop(sc, state, cur_handles, grand_handles, n_merges, caches):
         new_state = state.select(
             "cnt", _merge_fold(F.col("sym"), left, right).alias("sym")
         )
-        before = caches.persistent_ids(sc)
-        state = new_state.localCheckpoint(eager=False)
-        grand_handles, cur_handles = cur_handles, caches.checkpoint_handles_since(
-            sc, before
-        )
+        grand_handle = cur_handle
+        state, cur_handle = caches.local_checkpoint(new_state, eager=False)
 
-    for h in grand_handles:
-        h.unpersist()
-    for h in cur_handles:
-        h.unpersist()
+    # every exit follows a round's argmax, which already released the
+    # grandparent
+    cur_handle.unpersist()
     return merges
 
 

@@ -9,11 +9,15 @@ Each producer also retires its own predecessor on re-invocation, so the
 live set is bounded by the number of distinct cache-producing queries, not
 by invocation count.
 
-localCheckpoint needs special handling: ``DataFrame.unpersist()`` is a
-no-op for it (the storage belongs to the internal RDD, not the cache
-manager), so checkpointed producers register a JVM-RDD handle captured by
-diffing ``getPersistentRDDs`` around the checkpoint call (verified
-empirically on Spark 4.1: only ``jrdd.unpersist()`` releases the blocks).
+localCheckpoint storage belongs to the checkpointed RDD, not the cache
+manager, so ``DataFrame.unpersist()`` is a no-op for it.  Every
+localCheckpoint in the library goes through :func:`local_checkpoint`,
+which takes the release handle from the checkpoint's OWN plan: the
+returned frame's logical plan is a ``LogicalRDD`` whose ``rdd()`` is
+exactly the RDD that localCheckpoint persisted (eager and lazy alike).
+The handle therefore names only that checkpoint's blocks, whatever other
+thread is checkpointing at the same time.  A callee whose lazy result
+reads its own checkpoint registers the handle itself.
 
 OWNERSHIP
 ---------
@@ -29,23 +33,13 @@ made inside the with-block.  Pinned by tests/test_caches_scope.py.
 from __future__ import annotations
 
 import contextlib
-import threading
 
 LIVE: list = []
-
-# Serializes the snapshot → localCheckpoint → diff capture pattern
-# (persistent_ids / checkpoint_handles_since) for callers that run
-# checkpoint-producing loops CONCURRENTLY (webgraph.spam_mass_ranks runs
-# the pagerank and trustrank loops on two threads).  Without it, thread
-# A's id-diff can capture thread B's just-created checkpoint RDD and later
-# unpersist it out from under B — a lineage-truncated RDD cannot be
-# recomputed.  Uncontended in every single-threaded caller.
-CKPT_LOCK = threading.RLock()
 
 
 def register(handle) -> None:
     """``handle`` is anything with .unpersist(): a persisted DataFrame or a
-    JvmRddHandle from :func:`checkpoint_handles_since`."""
+    JvmRddHandle from :func:`local_checkpoint`."""
     LIVE.append(handle)
 
 
@@ -94,20 +88,12 @@ class JvmRddHandle:
         self._jrdd.unpersist(False)
 
 
-def persistent_ids(sc) -> set:
-    jmap = sc._jsc.getPersistentRDDs()
-    ids, it = set(), jmap.entrySet().iterator()
-    while it.hasNext():
-        ids.add(it.next().getKey())
-    return ids
+def local_checkpoint(df, eager: bool = True):
+    """``df.localCheckpoint(eager)`` → ``(checkpointed_df, handle)``; the
+    handle's ``unpersist()`` frees exactly this checkpoint's blocks.
 
-
-def checkpoint_handles_since(sc, before: set) -> list:
-    """JVM handles for persistent RDDs that appeared after ``before`` was
-    snapshotted — i.e. the blocks an eager localCheckpoint just stored."""
-    handles, it = [], sc._jsc.getPersistentRDDs().entrySet().iterator()
-    while it.hasNext():
-        e = it.next()
-        if e.getKey() not in before:
-            handles.append(JvmRddHandle(e.getValue()))
-    return handles
+    A lazy checkpoint reads its parent when its first action runs, and a
+    truncated-lineage RDD cannot be recomputed once released: free a
+    predecessor's handle only after the successor has materialized."""
+    out = df.localCheckpoint(eager=eager)
+    return out, JvmRddHandle(out._jdf.queryExecution().logical().rdd())

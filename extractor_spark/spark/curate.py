@@ -139,11 +139,15 @@ def assign_packs(
         base = docs.withColumn(
             "n_tokens", F.size(F.split(F.trim("text"), r"\s+")).cast("bigint")
         )
-    parts = (
-        base.repartitionByRange(n_parts, order_col)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)  # the totals collect materializes it
+    parts, parts_handle = caches.local_checkpoint(
+        base.repartitionByRange(n_parts, order_col).withColumn(
+            "_pid", F.spark_partition_id()
+        ),
+        eager=False,  # the totals collect materializes it
     )
+    # the returned frame is lazy over this checkpoint: consumers release it
+    # via queries.release_query_caches() (the caches.py contract)
+    caches.register(parts_handle)
     totals = parts.groupBy("_pid").agg(F.sum("n_tokens").alias("t")).collect()
     by_pid = {r["_pid"]: r["t"] for r in totals}
     offsets, acc = [], 0
@@ -223,9 +227,13 @@ def curate(
     )
     stats = {"input_docs": docs.count()}
     _mark("input")
-    sc = spark.sparkContext
     cache_mark = len(caches.LIVE)  # don't touch unrelated queries' caches
     ckpt_handles: list = []
+
+    def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+        df, handle = caches.local_checkpoint(df, eager)
+        ckpt_handles.append(handle)
+        return df
 
     # 0. URL blocklist (UT1 rules): drop matched pages before any hashing
     if blocklist_domains or blocklist_urls:
@@ -260,11 +268,9 @@ def curate(
         .select("url")
     )
     docs = docs.join(keep, "url")
-    before = caches.persistent_ids(sc)
     # lazy: the stage count below is the materializing job (one pass, not
     # checkpoint + count); reused by pairs + components + filter
-    docs = docs.localCheckpoint(eager=False)
-    ckpt_handles += caches.checkpoint_handles_since(sc, before)
+    docs = checkpoint(docs, eager=False)
     stats["after_exact_dedup"] = docs.count()
     _mark("exact_dedup")
 
@@ -273,25 +279,21 @@ def curate(
     # materialize the shingle sets and band table once each (both are
     # consumed 2-3 times downstream; without the checkpoint Spark would
     # recompute the 64-hash signature projection per consumer)
-    before = caches.persistent_ids(sc)
-    sh = spark.sql(_SHINGLE_SETS_TMPL.format(view="curate_docs")).localCheckpoint()
+    sh = checkpoint(spark.sql(_SHINGLE_SETS_TMPL.format(view="curate_docs")))
     sh.createOrReplaceTempView("curate_sh")
     _mark("shingle_sets")
-    bands = spark.sql(_BANDS_SQL).localCheckpoint()
+    bands = checkpoint(spark.sql(_BANDS_SQL))
     bands.createOrReplaceTempView("curate_bands")
     _mark("bands")
-    ckpt_handles += caches.checkpoint_handles_since(sc, before)
     # materialize the verified pairs before the CC loop: the verify join is
     # the funnel's most expensive plan, and leaving it lazy re-plans it
     # inside the first label-propagation round's edges materialization —
     # measured 3-5x timing instability at 100k docs (AQE re-plans under a
     # different runtime-stats context); checkpointed it is a stable ~9 s
     # stage and the CC rounds join a small materialized edge table.
-    before = caches.persistent_ids(sc)
-    pairs = spark.sql(
-        _VERIFIED_PAIRS_TMPL.format(threshold=jaccard_threshold)
-    ).localCheckpoint()
-    ckpt_handles += caches.checkpoint_handles_since(sc, before)
+    pairs = checkpoint(
+        spark.sql(_VERIFIED_PAIRS_TMPL.format(threshold=jaccard_threshold))
+    )
     _mark("verified_pairs")
     labels = _components(docs, pairs, components)
     # r6 canonical pick: decide on LIGHT rows, attach once (guide §8).
@@ -313,12 +315,9 @@ def curate(
         .filter("_rk = 1")
         .select("url", *(["cluster_id"] if split else []))
     )
-    before = caches.persistent_ids(sc)
-    docs = docs.join(kept, "url").localCheckpoint(
-        eager=False
-    )  # consumed by two counts AND the export
-    # write; the stage count below is the materializing job
-    ckpt_handles += caches.checkpoint_handles_since(sc, before)
+    # consumed by two counts AND the export write; the stage count below
+    # is the materializing job
+    docs = checkpoint(docs.join(kept, "url"), eager=False)
     stats["after_neardup_dedup"] = docs.count()
     _mark("components_canonical")
     # labels' checkpoint (registered by min_label_components) has no
@@ -389,7 +388,6 @@ def curate(
     # surviving docs (url order), so the exported JSONL can be consumed as
     # concat-then-chunk sequences without another pass over the corpus
     if pack_budget:
-        sc_before = caches.persistent_ids(sc)
         # seeded global shuffle order for pack composition (deterministic:
         # same seed → same packs); url order otherwise
         order_col = "url"
@@ -403,10 +401,10 @@ def curate(
         # export write consume it, and the post-checkpoint window+join
         # portion of assign_packs would otherwise run twice (lazy: the
         # n_packs aggregate below is the materializing job)
-        docs = assign_packs(spark, docs, order_col, pack_budget).drop(
-            "_ord"
-        ).localCheckpoint(eager=False)
-        ckpt_handles += caches.checkpoint_handles_since(sc, sc_before)
+        docs = checkpoint(
+            assign_packs(spark, docs, order_col, pack_budget).drop("_ord"),
+            eager=False,
+        )
         stats["n_packs"] = docs.agg(F.countDistinct("pack_id")).first()[0]
         stats["pack_budget"] = pack_budget
 
@@ -416,8 +414,10 @@ def curate(
     write_output(docs, output_path, fmt="jsonl", partition_col=None)
     _mark("export")
     stats["output_path"] = output_path
-    # the export was the last consumer — release this run's checkpoints
-    # (curate owns them end-to-end, unlike lazy-returning queries)
+    # the export was the last consumer — release this run's checkpoints,
+    # assign_packs' included (curate owns them end-to-end, unlike
+    # lazy-returning queries)
     for h in ckpt_handles:
         h.unpersist()
+    caches.retire_since(cache_mark)
     return stats

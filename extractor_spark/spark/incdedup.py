@@ -39,6 +39,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import caches
+
 BANDS_SUBDIR = "bands"
 SHINGLES_SUBDIR = "shingles"
 
@@ -164,7 +166,8 @@ def dedup_batch(
     runs after its own first-attempt write still sees exactly the
     strictly-earlier store and produces the identical verdicts.
 
-    Returns the materialized verdict frame."""
+    Returns the materialized verdict frame; its checkpoint is registered
+    with ``caches`` (release via ``queries.release_query_caches()``)."""
     bands_dir = os.path.join(store_path, BANDS_SUBDIR)
     sh_dir = os.path.join(store_path, SHINGLES_SUBDIR)
     store_bands = _read_earlier(spark, bands_dir, batch_id)
@@ -181,9 +184,13 @@ def dedup_batch(
         # severs the lineage before the store mutates.  (With the
         # batch< pruning the recompute would now be benign, but the
         # snapshot guarantee is worth keeping explicit.)
-        out = _verdicts(
-            docs, batch_sh, batch_bands, store_sh, store_bands, threshold
-        ).localCheckpoint(eager=True)
+        out, out_handle = caches.local_checkpoint(
+            _verdicts(docs, batch_sh, batch_bands, store_sh, store_bands, threshold),
+            eager=True,
+        )
+        # the verdicts are a checkpoint: consumers release them via
+        # queries.release_query_caches() (the caches.py contract)
+        caches.register(out_handle)
         if append:
             # The two store tables live in independent dirs — write them on
             # two driver threads (r6: saves ~0.15 s/batch of sequential job

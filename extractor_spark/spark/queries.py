@@ -2059,12 +2059,9 @@ def _semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _views(spark, sf_dir)
     centroids = _ivf_centroids(spark)
-    sc = spark.sparkContext
-    before = caches.persistent_ids(sc)
-    cells = _ivf_assign_cells(spark, centroids).localCheckpoint()
+    cells, cells_handle = caches.local_checkpoint(_ivf_assign_cells(spark, centroids))
     cells.createOrReplaceTempView("ivf_cells")
-    for h in caches.checkpoint_handles_since(sc, before):
-        caches.register(h)
+    caches.register(cells_handle)
 
     pairs = _semdedup_pairs_frame(spark, _SEMDEDUP_THRESHOLD)
     labels = min_label_components(spark.table("embeddings"), pairs, "vec_id")
@@ -2126,37 +2123,31 @@ def _incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     work = tempfile.mkdtemp(prefix="incdedup_q_")
     try:
-        sc = spark.sparkContext
-        before = caches.persistent_ids(sc)
         outs = []
         # r6: the probe/verify shuffles inside each batch are sized by the
         # batch, not the core count (tuning.py); verdicts are min/compare
         # exact, so width cannot change results.
         from .tuning import loop_partitions, scoped_loop_conf
 
-        n_parts = loop_partitions(sc, spark.table("documents").count())
-        with scoped_loop_conf(spark, n_parts):
-            for b in range(3):
-                batch = docs.filter(F.col("b") == b).select("url", "text")
-                v = dedup_batch(spark, work, batch, batch_id=b)
-                outs.append(v.withColumn("batch_idx", F.lit(b)))
-        mid_handles = caches.checkpoint_handles_since(sc, before)
-        mid = caches.persistent_ids(sc)
-        res = outs[0].unionByName(outs[1]).unionByName(outs[2]).select(
-            F.col("url").cast("long").alias("doc_id"),
-            F.col("batch_idx").cast("int").alias("batch_idx"),
-            "is_dup",
-            F.col("dup_of").cast("long").alias("dup_of_doc"),
-        )
-        out = res.localCheckpoint(eager=True)
-        # the per-batch verdict checkpoints are dead once `out` is
-        # materialized — release their JVM blocks NOW (DataFrame.unpersist
-        # is a no-op for localCheckpoint storage, see caches module doc);
-        # out's own blocks are registered for release_query_caches()
-        for h in mid_handles:
-            h.unpersist()
-        for h in caches.checkpoint_handles_since(sc, mid):
-            caches.register(h)
+        n_parts = loop_partitions(spark.sparkContext, spark.table("documents").count())
+        # the per-batch verdict checkpoints (registered by dedup_batch) are
+        # dead once `out` is materialized — the scope releases their JVM
+        # blocks NOW; out's own blocks are registered for
+        # release_query_caches()
+        with caches.scope():
+            with scoped_loop_conf(spark, n_parts):
+                for b in range(3):
+                    batch = docs.filter(F.col("b") == b).select("url", "text")
+                    v = dedup_batch(spark, work, batch, batch_id=b)
+                    outs.append(v.withColumn("batch_idx", F.lit(b)))
+            res = outs[0].unionByName(outs[1]).unionByName(outs[2]).select(
+                F.col("url").cast("long").alias("doc_id"),
+                F.col("batch_idx").cast("int").alias("batch_idx"),
+                "is_dup",
+                F.col("dup_of").cast("long").alias("dup_of_doc"),
+            )
+            out, out_handle = caches.local_checkpoint(res, eager=True)
+        caches.register(out_handle)
         return out.orderBy("doc_id")
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -2396,13 +2387,9 @@ def _sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.split(F.trim("text"), r"\s+")).cast("bigint").alias("n_tokens"),
     )
     # assign_packs (spark/curate.py) is the single implementation of the
-    # two-level distributed prefix sum; its checkpoint blocks are
-    # registered for release_query_caches since the result is lazy
-    sc = spark.sparkContext
-    before = caches.persistent_ids(sc)
+    # two-level distributed prefix sum; it registers its checkpoint for
+    # release_query_caches since the result is lazy
     packed = assign_packs(spark, docs, "doc_id", _PACK_BUDGET)
-    for h in caches.checkpoint_handles_since(sc, before):
-        caches.register(h)
     return (
         packed.groupBy("pack_id")
         .agg(
@@ -3284,11 +3271,8 @@ def _hostgraph_spam_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .webgraph import extract_outlinks, host_graph, spam_mass_ranks
 
     pages = _webgraph_pages(spark)
-    sc = spark.sparkContext
-    before = caches.persistent_ids(sc)
-    edges = host_graph(extract_outlinks(pages)).localCheckpoint()
-    for h in caches.checkpoint_handles_since(sc, before):
-        caches.register(h)
+    edges, edges_handle = caches.local_checkpoint(host_graph(extract_outlinks(pages)))
+    caches.register(edges_handle)
     seeds = (
         edges.select(F.col("src_host").alias("host"))
         .unionAll(edges.select(F.col("dst_host").alias("host")))
@@ -3297,7 +3281,8 @@ def _hostgraph_spam_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r6: the two power-iteration loops are data-independent — run them on
     # two driver threads (webgraph.spam_mass_ranks; bit-identical to the
-    # sequential calls, wall ≈ the slower loop instead of the sum)
+    # sequential calls, wall ≈ the slower loop instead of the sum; each
+    # loop releases only its own checkpoints, so the threads need no lock)
     pr, tr = spam_mass_ranks(edges, seeds, max_iter=20, tol=1e-9)
     pr = pr.withColumnRenamed("rank", "pr")
     tr = tr.withColumnRenamed("rank", "tr")

@@ -33,11 +33,13 @@ Design for 10^12 pages / ~10^8 hosts:
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import caches
 from .tuning import loop_partitions, scoped_loop_conf
 
 
@@ -286,7 +288,7 @@ def host_graph(outlinks: DataFrame, drop_self_loops: bool = True) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# PageRank (power iteration, one shuffle per round, flat lineage)
+# PageRank / TrustRank (power iteration, one shuffle per round, flat lineage)
 # ---------------------------------------------------------------------------
 
 
@@ -306,160 +308,15 @@ def pagerank(
     touches every partition, so the checkpoint blocks it persists as a
     side effect are complete) — no per-round semi-join, no separate
     checkpoint job, no extra contrib materialization."""
-    spark = edges.sparkSession
-    edges, nodes, n, n_parts = _pagerank_prep(edges)
-    if n == 0:
-        edges.unpersist()
-        return spark.createDataFrame([], "host string, rank double")
-    base = (1.0 - damping) / n
-
-    with scoped_loop_conf(spark, n_parts, codegen=False):
-        return _pagerank_loop(
-            spark, edges, nodes, n, n_parts, base, damping, max_iter, tol
-        )
-
-
-def _pagerank_prep(edges: DataFrame):
-    """Pre-loop sizing shared by :func:`pagerank` and
-    :func:`spam_mass_ranks`: persists the edge frame, builds the node set,
-    counts it, and derives the loop's shuffle width.  ``n == 0`` means the
-    empty graph — the caller unpersists and returns the empty result."""
-    sc = edges.sparkSession.sparkContext
-
     # edges is consumed three times before the loop (node set, dangling
     # flags, transition weights); without a persist each consumer re-runs
     # the caller's full upstream plan (for the host graph: the Python
     # outlink extraction over every page)
     edges = edges.persist()
-
-    nodes = (
-        edges.select(F.col("src_host").alias("host"))
-        .unionAll(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-    )
-    n = nodes.count()
-    # r6: the loop's shuffle width follows the graph size, not the core
-    # count — 40 rounds of full-width stages over a host-sized frame are
-    # pure scheduling overhead at small scale (tuning.py).
-    n_parts = loop_partitions(sc, max(n, edges.count())) if n else 1
-    return edges, nodes, n, n_parts
-
-
-def _pagerank_loop(
-    spark, edges, nodes, n, n_parts, base, damping, max_iter, tol
-) -> DataFrame:
-    from . import caches
-
-    sc = spark.sparkContext
-    # Pre-normalize transition weights once: w = n_links / total_out(src).
-    out_totals = edges.groupBy("src_host").agg(F.sum("n_links").alias("out_total"))
-    trans = (
-        edges.join(out_totals, "src_host")
-        .select(
-            F.col("src_host").alias("host"),
-            "dst_host",
-            (F.col("n_links").cast("double") / F.col("out_total")).alias("w"),
-        )
-        .repartition(n_parts, "host")
-    )
-    # r6: eager localCheckpoint, not persist — a bare persist leaves the
-    # full upstream LOGICAL plan (the Python outlink extraction) inside
-    # trans, and every round's analysis/optimization re-walks it: the
-    # cache short-circuits execution, not planning.  Truncating the
-    # lineage makes each round's plan LogicalRDD-sized (measured ~-1 s
-    # per 20-round loop at sf0.1, outputs bit-identical —
-    # scripts/probe_unroll_pagerank.py).  Capture sections hold
-    # caches.CKPT_LOCK so a concurrent loop (spam_mass_ranks) cannot be
-    # cross-captured by this loop's id diff.
-    with caches.CKPT_LOCK:
-        before_trans = caches.persistent_ids(sc)
-        trans = trans.localCheckpoint(eager=True)
-        trans_handles = caches.checkpoint_handles_since(sc, before_trans)
-
-    # Dangling = never appears as a source; flagged once, carried in state.
-    srcs = edges.select(F.col("src_host").alias("host")).distinct().withColumn(
-        "_has_out", F.lit(True)
-    )
-    ranks = (
-        nodes.join(srcs, "host", "left")
-        .select(
-            "host",
-            F.lit(1.0 / n).alias("rank"),
-            (~F.coalesce(F.col("_has_out"), F.lit(False))).alias("is_dangling"),
-        )
-    )
-    with caches.CKPT_LOCK:
-        before = caches.persistent_ids(sc)
-        ranks = ranks.localCheckpoint(eager=False)
-        prev_handles = caches.checkpoint_handles_since(sc, before)
-    dangling_mass = (
-        ranks.agg(
-            F.coalesce(F.sum(F.when(F.col("is_dangling"), F.col("rank"))), F.lit(0.0))
-        ).first()[0]
-    )
-
-    # Loop-invariant Column objects hoisted out of the rounds (r6): Columns
-    # are immutable and reusable across DataFrames, and every F.* call is a
-    # py4j round-trip — per-round expression building was a measurable slice
-    # of the ~150 ms/round driver floor.  Only the dangling-mass literal is
-    # rebuilt per round.
-    c_dst = F.col("dst_host").alias("host")
-    c_contrib_in = (F.col("rank") * F.col("w")).alias("c")
-    c_contrib = F.sum("c").alias("contrib")
-    c_old_rank = F.col("rank").alias("old_rank")
-    c_base = F.lit(base)
-    c_damping = F.lit(damping)
-    c_coalesce0 = F.coalesce("contrib", F.lit(0.0))
-    c_delta = F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("delta")
-    c_dangling = F.coalesce(
-        F.sum(F.when(F.col("is_dangling"), F.col("rank"))), F.lit(0.0)
-    ).alias("dangling")
-
-    for _ in range(max_iter):
-        contrib = (
-            ranks.join(trans, "host")
-            .select(c_dst, c_contrib_in)
-            .groupBy("host")
-            .agg(c_contrib)
-        )
-        new_ranks = (
-            ranks.select("host", c_old_rank, "is_dangling")
-            .join(contrib, "host", "left")
-            .select(
-                "host",
-                (
-                    c_base
-                    + c_damping * (c_coalesce0 + F.lit(dangling_mass / n))
-                ).alias("rank"),
-                "old_rank",
-                "is_dangling",
-            )
-        )
-        with caches.CKPT_LOCK:
-            before = caches.persistent_ids(sc)
-            new_ranks = new_ranks.localCheckpoint(eager=False)
-            cur_handles = caches.checkpoint_handles_since(sc, before)
-        # the aggregate below is the checkpoint's materializing job; once
-        # it returns, the previous round's blocks have no dependents —
-        # free them so peak rank storage is 2 rounds (same pattern as
-        # graph.min_label_components)
-        row = new_ranks.agg(c_delta, c_dangling).first()
-        delta, dangling_mass = row["delta"], row["dangling"]
-        ranks = new_ranks.select("host", "rank", "is_dangling")
-        for h in prev_handles:
-            h.unpersist()
-        prev_handles = cur_handles
-        if delta < tol:
-            break
-
-    for h in trans_handles:
-        h.unpersist()
-    edges.unpersist()
-    # the final checkpoint backs the (lazy) result — consumers release it
-    # via queries.release_query_caches() after collecting
-    for h in prev_handles:
-        caches.register(h)
-    return ranks.select("host", "rank")
+    try:
+        return _run(edges, _pagerank_setup(edges, damping), max_iter, tol)
+    finally:
+        edges.unpersist()
 
 
 def trustrank(
@@ -491,31 +348,50 @@ def trustrank(
     Gyöngyi initialization).  Twin: numpy same-iterate ±1e-12
     (tests/test_webgraph.py).
     """
-    spark = edges.sparkSession
-    edges, nodes, seed_df, n_seeds, n_parts = _trustrank_prep(edges, seeds)
-    if n_seeds == 0:
+    edges = edges.persist()  # see pagerank
+    try:
+        return _run(edges, _trustrank_setup(edges, seeds, damping), max_iter, tol)
+    finally:
         edges.unpersist()
-        return spark.createDataFrame([], "host string, rank double")
-
-    with scoped_loop_conf(spark, n_parts, codegen=False):
-        return _trustrank_loop(
-            spark, edges, nodes, seed_df, n_seeds, n_parts, damping, max_iter, tol
-        )
 
 
-def _trustrank_prep(edges: DataFrame, seeds):
-    """Pre-loop sizing shared by :func:`trustrank` and
-    :func:`spam_mass_ranks` — mirrors :func:`_pagerank_prep`.
-    ``n_seeds == 0`` means no seed intersects the graph."""
-    spark = edges.sparkSession
-    sc = spark.sparkContext
-
-    edges = edges.persist()
-    nodes = (
+def _node_set(edges: DataFrame) -> DataFrame:
+    return (
         edges.select(F.col("src_host").alias("host"))
         .unionAll(edges.select(F.col("dst_host").alias("host")))
         .distinct()
     )
+
+
+def _pagerank_setup(edges: DataFrame, damping: float):
+    """Sizing and rank rule of the uniform-teleport loop →
+    ``(n_parts, loop)`` with ``loop(max_iter, tol)``, or None for the
+    empty graph.  ``edges`` must already be persisted."""
+    nodes = _node_set(edges)
+    n = nodes.count()
+    if n == 0:
+        return None
+    # r6: the loop's shuffle width follows the graph size, not the core
+    # count — 40 rounds of full-width stages over a host-sized frame are
+    # pure scheduling overhead at small scale (tuning.py).
+    n_parts = loop_partitions(edges.sparkSession.sparkContext, max(n, edges.count()))
+    c_base = F.lit((1.0 - damping) / n)
+    c_damping = F.lit(damping)
+
+    def init(joined: DataFrame, is_dangling) -> DataFrame:
+        return joined.select("host", F.lit(1.0 / n).alias("rank"), is_dangling)
+
+    def rank(contrib, dangling_mass: float):
+        return c_base + c_damping * (contrib + F.lit(dangling_mass / n))
+
+    return n_parts, partial(_power_loop, edges, nodes, n_parts, init, ("is_dangling",), rank)
+
+
+def _trustrank_setup(edges: DataFrame, seeds, damping: float):
+    """Seeded counterpart of :func:`_pagerank_setup`; None when no seed
+    intersects the graph."""
+    spark = edges.sparkSession
+    nodes = _node_set(edges)
     # seed lists are human-curated and bounded (thousands of hosts even at
     # web scale) — broadcastable by construction
     if isinstance(seeds, DataFrame):
@@ -525,17 +401,51 @@ def _trustrank_prep(edges: DataFrame, seeds):
             [(h,) for h in sorted(set(seeds))], "host string"
         ).withColumn("_seed", F.lit(True))
     n_seeds = nodes.join(F.broadcast(seed_df), "host").count()
-    # r6: scale-adaptive loop width (see pagerank / tuning.py)
-    n_parts = loop_partitions(sc, edges.count()) if n_seeds else 1
-    return edges, nodes, seed_df, n_seeds, n_parts
+    if n_seeds == 0:
+        return None
+    # r6: scale-adaptive loop width (see _pagerank_setup / tuning.py)
+    n_parts = loop_partitions(spark.sparkContext, edges.count())
+    c_teleport = F.lit(1.0 - damping) * F.col("s")
+    c_damping = F.lit(damping)
+    c_s = F.col("s")
+
+    def init(joined: DataFrame, is_dangling) -> DataFrame:
+        return (
+            joined.join(F.broadcast(seed_df), "host", "left")
+            .select(
+                "host",
+                F.when(F.coalesce("_seed", F.lit(False)), F.lit(1.0 / n_seeds))
+                .otherwise(F.lit(0.0))
+                .alias("s"),
+                is_dangling,
+            )
+            .withColumn("rank", F.col("s"))
+        )
+
+    def rank(contrib, dangling_mass: float):
+        return c_teleport + c_damping * (contrib + F.lit(dangling_mass) * c_s)
+
+    carried = ("is_dangling", "s")
+    return n_parts, partial(_power_loop, edges, nodes, n_parts, init, carried, rank)
 
 
-def _trustrank_loop(
-    spark, edges, nodes, seed_df, n_seeds, n_parts, damping, max_iter, tol
+def _run(edges: DataFrame, setup, max_iter: int, tol: float) -> DataFrame:
+    if setup is None:
+        return edges.sparkSession.createDataFrame([], "host string, rank double")
+    n_parts, loop = setup
+    with scoped_loop_conf(edges.sparkSession, n_parts, codegen=False):
+        return loop(max_iter, tol)
+
+
+def _power_loop(
+    edges, nodes, n_parts, init, carried, rank, max_iter, tol
 ) -> DataFrame:
-    from . import caches
-
-    sc = spark.sparkContext
+    """The power iteration both rank vectors share.  ``init(joined,
+    is_dangling)`` builds the first state from the node set left-joined to
+    the source flags; the state carries ``carried`` columns unchanged
+    through every round; ``rank(contrib, dangling_mass)`` is the round's
+    new-rank expression.  The caller owns ``edges``' persist."""
+    # Pre-normalize transition weights once: w = n_links / total_out(src).
     out_totals = edges.groupBy("src_host").agg(F.sum("n_links").alias("out_total"))
     trans = (
         edges.join(out_totals, "src_host")
@@ -546,48 +456,39 @@ def _trustrank_loop(
         )
         .repartition(n_parts, "host")
     )
-    # r6: eager localCheckpoint for the same planning-cost reason as
-    # _pagerank_loop — a persist keeps the full upstream logical plan in
-    # every round's analysis.  CKPT_LOCK: see _pagerank_loop.
-    with caches.CKPT_LOCK:
-        before_trans = caches.persistent_ids(sc)
-        trans = trans.localCheckpoint(eager=True)
-        trans_handles = caches.checkpoint_handles_since(sc, before_trans)
+    # r6: eager localCheckpoint, not persist — a bare persist leaves the
+    # full upstream LOGICAL plan (the Python outlink extraction) inside
+    # trans, and every round's analysis/optimization re-walks it: the
+    # cache short-circuits execution, not planning.  Truncating the
+    # lineage makes each round's plan LogicalRDD-sized (measured ~-1 s
+    # per 20-round loop at sf0.1, outputs bit-identical —
+    # scripts/probe_unroll_pagerank.py).
+    trans, trans_handle = caches.local_checkpoint(trans, eager=True)
 
+    # Dangling = never appears as a source; flagged once, carried in state.
     srcs = edges.select(F.col("src_host").alias("host")).distinct().withColumn(
         "_has_out", F.lit(True)
     )
-    ranks = (
-        nodes.join(srcs, "host", "left")
-        .join(F.broadcast(seed_df), "host", "left")
-        .select(
-            "host",
-            F.when(F.coalesce("_seed", F.lit(False)), F.lit(1.0 / n_seeds))
-            .otherwise(F.lit(0.0))
-            .alias("s"),
-            (~F.coalesce(F.col("_has_out"), F.lit(False))).alias("is_dangling"),
-        )
-        .withColumn("rank", F.col("s"))
+    is_dangling = (~F.coalesce(F.col("_has_out"), F.lit(False))).alias("is_dangling")
+    ranks, prev_handle = caches.local_checkpoint(
+        init(nodes.join(srcs, "host", "left"), is_dangling), eager=False
     )
-    with caches.CKPT_LOCK:
-        before = caches.persistent_ids(sc)
-        ranks = ranks.localCheckpoint(eager=False)
-        prev_handles = caches.checkpoint_handles_since(sc, before)
     dangling_mass = (
         ranks.agg(
             F.coalesce(F.sum(F.when(F.col("is_dangling"), F.col("rank"))), F.lit(0.0))
         ).first()[0]
     )
 
-    # loop-invariant Columns hoisted — see _pagerank_loop (r6)
+    # Loop-invariant Column objects hoisted out of the rounds (r6): Columns
+    # are immutable and reusable across DataFrames, and every F.* call is a
+    # py4j round-trip — per-round expression building was a measurable slice
+    # of the ~150 ms/round driver floor.  Only the dangling-mass literal is
+    # rebuilt per round (inside ``rank``).
     c_dst = F.col("dst_host").alias("host")
     c_contrib_in = (F.col("rank") * F.col("w")).alias("c")
     c_contrib = F.sum("c").alias("contrib")
     c_old_rank = F.col("rank").alias("old_rank")
-    c_teleport = F.lit(1.0 - damping) * F.col("s")
-    c_damping = F.lit(damping)
     c_coalesce0 = F.coalesce("contrib", F.lit(0.0))
-    c_s = F.col("s")
     c_delta = F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("delta")
     c_dangling = F.coalesce(
         F.sum(F.when(F.col("is_dangling"), F.col("rank"))), F.lit(0.0)
@@ -601,37 +502,32 @@ def _trustrank_loop(
             .agg(c_contrib)
         )
         new_ranks = (
-            ranks.select("host", c_old_rank, "is_dangling", "s")
+            ranks.select("host", c_old_rank, *carried)
             .join(contrib, "host", "left")
             .select(
                 "host",
-                (
-                    c_teleport
-                    + c_damping * (c_coalesce0 + F.lit(dangling_mass) * c_s)
-                ).alias("rank"),
+                rank(c_coalesce0, dangling_mass).alias("rank"),
                 "old_rank",
-                "is_dangling",
-                "s",
+                *carried,
             )
         )
-        with caches.CKPT_LOCK:
-            before = caches.persistent_ids(sc)
-            new_ranks = new_ranks.localCheckpoint(eager=False)
-            cur_handles = caches.checkpoint_handles_since(sc, before)
+        new_ranks, cur_handle = caches.local_checkpoint(new_ranks, eager=False)
+        # the aggregate below is the checkpoint's materializing job; once
+        # it returns, the previous round's blocks have no dependents —
+        # free them so peak rank storage is 2 rounds (same pattern as
+        # graph.min_label_components)
         row = new_ranks.agg(c_delta, c_dangling).first()
         delta, dangling_mass = row["delta"], row["dangling"]
-        ranks = new_ranks.select("host", "rank", "is_dangling", "s")
-        for h in prev_handles:
-            h.unpersist()
-        prev_handles = cur_handles
+        ranks = new_ranks.select("host", "rank", *carried)
+        prev_handle.unpersist()
+        prev_handle = cur_handle
         if delta < tol:
             break
 
-    for h in trans_handles:
-        h.unpersist()
-    edges.unpersist()
-    for h in prev_handles:
-        caches.register(h)
+    trans_handle.unpersist()
+    # the final checkpoint backs the (lazy) result — consumers release it
+    # via queries.release_query_caches() after collecting
+    caches.register(prev_handle)
     return ranks.select("host", "rank")
 
 
@@ -650,7 +546,9 @@ def spam_mass_ranks(
     frame), and each round is ~45 ms of driver plan compile + one short
     job, so interleaving them overlaps one loop's driver work with the
     other's executor work: wall ≈ the slower loop instead of the sum
-    (r6, measured ~−2 s on the sf0.1 spam-mass query).
+    (measured on the llm_curate seed-1 host graph, 3 rounds, 4 cores:
+    running them one after the other adds ~0.7 s to a ~3.6 s graph
+    phase — scripts/probe_spam_threads.py).
 
     Results are bit-identical to sequential ``pagerank()`` +
     ``trustrank()``:
@@ -661,68 +559,44 @@ def spam_mass_ranks(
       plan always compiles under exactly the conf it would have seen
       sequentially;
     - each loop's FP math touches only its own state frames;
-    - checkpoint handle capture (a global persistent-RDD id diff) is
-      serialized by ``caches.CKPT_LOCK`` so neither loop can capture — and
-      later release — the other's lineage-truncated checkpoint blocks.
+    - each loop releases only the checkpoints it created: a release handle
+      comes from its checkpoint's own plan (``caches.local_checkpoint``),
+      so the threads are safe by construction, with no lock.
+
+    The shared edge cache is released once, after both loops are done.
     """
     import threading
 
-    spark = edges.sparkSession
-    p_edges, p_nodes, n, p_parts = _pagerank_prep(edges)
-    if n == 0:
-        p_edges.unpersist()
-        return (
-            spark.createDataFrame([], "host string, rank double"),
-            trustrank(edges, seeds, damping, max_iter, tol),
-        )
-    base = (1.0 - damping) / n
-    t_edges, t_nodes, seed_df, n_seeds, t_parts = _trustrank_prep(edges, seeds)
-    if n_seeds == 0:
-        # t_edges is p_edges' cache; _pagerank_loop releases it when done
-        with scoped_loop_conf(spark, p_parts, codegen=False):
-            pr = _pagerank_loop(
-                spark, p_edges, p_nodes, n, p_parts, base, damping, max_iter, tol
-            )
-        return pr, spark.createDataFrame([], "host string, rank double")
+    edges = edges.persist()  # see pagerank
+    try:
+        pr = _pagerank_setup(edges, damping)
+        tr = _trustrank_setup(edges, seeds, damping)
+        if pr is None or tr is None or pr[0] != tr[0]:
+            return _run(edges, pr, max_iter, tol), _run(edges, tr, max_iter, tol)
 
-    def run_pr():
-        return _pagerank_loop(
-            spark, p_edges, p_nodes, n, p_parts, base, damping, max_iter, tol
-        )
+        results: list = [None, None]
+        errors: list = []
 
-    def run_tr():
-        return _trustrank_loop(
-            spark, t_edges, t_nodes, seed_df, n_seeds, t_parts, damping, max_iter, tol
-        )
+        def runner(i, loop):
+            try:
+                results[i] = loop(max_iter, tol)
+            except BaseException as e:  # noqa: BLE001 — re-raised on the caller thread
+                errors.append(e)
 
-    if p_parts != t_parts:
-        with scoped_loop_conf(spark, p_parts, codegen=False):
-            pr = run_pr()
-        with scoped_loop_conf(spark, t_parts, codegen=False):
-            tr = run_tr()
-        return pr, tr
-
-    results: dict = {}
-    errors: list = []
-
-    def runner(key, fn):
-        try:
-            results[key] = fn()
-        except BaseException as e:  # noqa: BLE001 — re-raised on the caller thread
-            errors.append(e)
-
-    with scoped_loop_conf(spark, p_parts, codegen=False):
-        threads = [
-            threading.Thread(target=runner, args=("pr", run_pr), daemon=True),
-            threading.Thread(target=runner, args=("tr", run_tr), daemon=True),
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-    if errors:
-        raise errors[0]
-    return results["pr"], results["tr"]
+        with scoped_loop_conf(edges.sparkSession, pr[0], codegen=False):
+            threads = [
+                threading.Thread(target=runner, args=(i, setup[1]), daemon=True)
+                for i, setup in enumerate((pr, tr))
+            ]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join()
+        if errors:
+            raise errors[0]
+        return results[0], results[1]
+    finally:
+        edges.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -763,8 +637,6 @@ def hits(edges: DataFrame, max_iter: int = 20) -> DataFrame:
       bounded driver time; a convergence delta would cost a second scan
       per round for a loop that runs ~20 rounds regardless.
     """
-    from . import caches
-
     spark = edges.sparkSession
     sc = spark.sparkContext
 
@@ -773,68 +645,55 @@ def hits(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     # hosts missing from a round's sums) — an eager localCheckpoint both
     # caches it AND truncates its logical plan (a bare persist would leave
     # the full upstream lineage in every round's analysis, see
-    # _pagerank_loop)
-    before_nodes = caches.persistent_ids(sc)
-    nodes = (
-        edges.select(F.col("src_host").alias("host"))
-        .unionAll(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes_handles = caches.checkpoint_handles_since(sc, before_nodes)
+    # _power_loop)
+    nodes, nodes_handle = caches.local_checkpoint(_node_set(edges), eager=True)
     n = nodes.count()
     if n == 0:
-        for h in nodes_handles:
-            h.unpersist()
+        nodes_handle.unpersist()
         edges.unpersist()
         return spark.createDataFrame([], "host string, hub double, authority double")
 
     # r6: scale-adaptive loop width (see pagerank / tuning.py)
     n_parts = loop_partitions(sc, max(n, edges.count()))
     with scoped_loop_conf(spark, n_parts, codegen=False):
-        out = _hits_loop(spark, edges, nodes, n, n_parts, max_iter)
+        out = _hits_loop(edges, nodes, n, n_parts, max_iter)
     # the final state checkpoint (registered by the loop) backs the lazy
-    # result; the node frame does not — free it now
-    for h in nodes_handles:
-        h.unpersist()
+    # result; the node frame and the edges do not — free them now
+    nodes_handle.unpersist()
+    edges.unpersist()
     return out
 
 
-# probe override for the per-round a_raw materialization strategy (None =
-# size-derived; scripts/probe_hits_inline.py forces each arm)
-_HITS_INLINE_OVERRIDE: bool | None = None
-
-
-def _hits_loop(spark, edges, nodes, n, n_parts, max_iter) -> DataFrame:
-    from . import caches
-
-    sc = spark.sparkContext
+def _hits_loop(edges, nodes, n, n_parts, max_iter) -> DataFrame:
     # In the tiny regime the a_raw subtree is a one-to-few-task join+agg:
     # recomputing it for its second consumer inside the same job is cheaper
     # than the ~45 ms/round physical-plan compile the lazy checkpoint call
-    # costs (measured, probe_hits_inline.py).  At real widths the checkpoint
-    # stays — there the recompute is a full extra shuffle's worth of work.
-    # Both forms are bit-identical: the checkpoint only shares an RDD, it
-    # never changes the computed values.
-    inline_araw = (
-        _HITS_INLINE_OVERRIDE if _HITS_INLINE_OVERRIDE is not None else n_parts <= 4
-    )
+    # costs.  At real widths the checkpoint stays — there the recompute is
+    # a full extra shuffle's worth of work.  The two forms are NOT
+    # bit-identical: inline, each consumer runs a_raw's floating-point sums
+    # itself (measured on the llm_curate seed-1 host graph: at 3 rounds 26
+    # of 33 hub and 3 of 33 authority values differ, by up to 1.1e-16; at
+    # 20 rounds they are equal).
+    inline_araw = n_parts <= 4
     w = edges.select("src_host", "dst_host", F.col("n_links").cast("double").alias("w"))
     # r6: eager localCheckpoints (not persists) so each round's plans are
-    # LogicalRDD-sized — see _pagerank_loop
-    before_w = caches.persistent_ids(sc)
-    by_src = w.repartition(n_parts, "src_host").localCheckpoint(eager=True)
-    by_dst = w.repartition(n_parts, "dst_host").localCheckpoint(eager=True)
-    w_handles = caches.checkpoint_handles_since(sc, before_w)
+    # LogicalRDD-sized — see _power_loop
+    by_src, by_src_handle = caches.local_checkpoint(
+        w.repartition(n_parts, "src_host"), eager=True
+    )
+    by_dst, by_dst_handle = caches.local_checkpoint(
+        w.repartition(n_parts, "dst_host"), eager=True
+    )
 
-    before = caches.persistent_ids(sc)
-    state = nodes.select(
-        "host", F.lit(1.0 / n).alias("hub"), F.lit(1.0 / n).alias("authority")
-    ).localCheckpoint(eager=False)
-    prev_handles = caches.checkpoint_handles_since(sc, before)
+    state, prev_handle = caches.local_checkpoint(
+        nodes.select(
+            "host", F.lit(1.0 / n).alias("hub"), F.lit(1.0 / n).alias("authority")
+        ),
+        eager=False,
+    )
     sh = state.agg(F.sum("hub")).first()[0]
 
-    # loop-invariant Columns hoisted — see _pagerank_loop (r6); only the
+    # loop-invariant Columns hoisted — see _power_loop (r6); only the
     # 1/sh literal is rebuilt per round
     c_src = F.col("host").alias("src_host")
     c_dst = F.col("dst_host").alias("host")
@@ -859,7 +718,7 @@ def _hits_loop(spark, edges, nodes, n, n_parts, max_iter) -> DataFrame:
             .groupBy("host")
             .agg(c_sum_a)
         )
-        araw_handles: list = []
+        araw_handle = None
         if not inline_araw:
             # LAZY checkpoint (r6): consumed by the hub join AND the new
             # state, but a checkpoint shares ONE RDD between them — the
@@ -867,10 +726,7 @@ def _hits_loop(spark, edges, nodes, n, n_parts, max_iter) -> DataFrame:
             # inside the same job (the recompute-twice hazard applies to
             # un-checkpointed frames, which duplicate at the plan level).
             # Eager here cost one extra job per round for nothing.
-            with caches.CKPT_LOCK:
-                before = caches.persistent_ids(sc)
-                a_raw = a_raw.localCheckpoint(eager=False)
-                araw_handles = caches.checkpoint_handles_since(sc, before)
+            a_raw, araw_handle = caches.local_checkpoint(a_raw, eager=False)
         # hub ← out-edge authorities (unnormalized a_raw: a global constant,
         # absorbed by the final normalization)
         h_raw = (
@@ -880,28 +736,22 @@ def _hits_loop(spark, edges, nodes, n, n_parts, max_iter) -> DataFrame:
             .groupBy("host")
             .agg(c_sum_h)
         )
-        state = (
+        state, cur_handle = caches.local_checkpoint(
             nodes.join(a_raw, "host", "left")
             .join(h_raw, "host", "left")
-            .select("host", c_hub_out, c_auth_out)
+            .select("host", c_hub_out, c_auth_out),
+            eager=False,
         )
-        with caches.CKPT_LOCK:
-            before = caches.persistent_ids(sc)
-            state = state.localCheckpoint(eager=False)
-            cur_handles = caches.checkpoint_handles_since(sc, before)
         sh = state.agg(c_sum_hub).first()[0]
-        for h in prev_handles:
-            h.unpersist()
-        for h in araw_handles:
-            h.unpersist()
-        prev_handles = cur_handles
+        prev_handle.unpersist()
+        if araw_handle is not None:
+            araw_handle.unpersist()
+        prev_handle = cur_handle
 
     sa = state.agg(F.sum("authority")).first()[0]
-    for h in w_handles:
-        h.unpersist()
-    edges.unpersist()
-    for h in prev_handles:
-        caches.register(h)
+    by_src_handle.unpersist()
+    by_dst_handle.unpersist()
+    caches.register(prev_handle)
     return state.select(
         "host",
         (F.col("hub") / F.lit(sh)).alias("hub"),

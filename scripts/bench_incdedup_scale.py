@@ -76,7 +76,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from extractor_spark.spark.incdedup import dedup_batch
-    from extractor_spark.spark.queries import pii_spans_df
+    from extractor_spark.spark.queries import pii_spans_df, release_query_caches
     from extractor_spark.spark.session import get_spark
 
     spark = get_spark("incdedup-scale-r5", cpus=32)
@@ -95,7 +95,7 @@ def main() -> None:
             n_dups = v.filter("is_dup").count()
             batch_s.append(round(time.time() - t0, 2))
             batch_dups.append(n_dups)
-            v.unpersist()
+            release_query_caches()  # the verdict checkpoint
         out["batch_s"] = batch_s
         out["batch_dups"] = batch_dups
     finally:

@@ -1,84 +1,135 @@
-"""In-process interleaved A/B for webgraph.spam_mass_ranks (r6).
+"""In-process interleaved A/B of the host-graph loops' execution mechanisms.
 
-Cold-process A/B on this box is JIT/window-noise-bound (identical code
-measured 7.7-16.6 s across reps).  This probe warms ONE session, then
-alternates the sequential form (pagerank(); trustrank()) with the
-threaded form (spam_mass_ranks()) over the same checkpointed edge frame,
-asserting bit-identical collected outputs each cycle.
+Cold-process A/B on a shared box is JIT/window-noise-bound (identical code
+measured 7.7-16.6 s across reps).  This probe warms ONE session, builds
+the host graph of the ``llm_curate`` benchmark corpus once (checkpointed),
+then times the graph phase the benchmark runs — ``pagerank``, ``hits``
+and ``spam_mass_ranks`` with fixed rounds — in interleaved arms:
 
-Usage: python scripts/probe_spam_threads.py [cycles]
+- ``threads``: the library as shipped (spam-mass loops on two driver
+  threads, codegen off in tiny-regime graph loops);
+- ``sequential``: ``pagerank()`` then ``trustrank()`` instead of the
+  threaded ``spam_mass_ranks``;
+- ``codegen``: the graph loops keep whole-stage/expression codegen on;
+- ``aqe`` (with ``--aqe``): the graph loops keep AQE on.
+
+The first three arms must produce repr-identical PageRank, HITS and
+spam-mass PageRank/TrustRank rows in every cycle (asserted).  AQE changes
+floating-point summation order, so the ``aqe`` arm only reports how many
+values of each vector differ.  Prints per-arm median and quartiles of the phase seconds.
+
+Usage: python scripts/probe_spam_threads.py [--cycles 10] [--rounds 3]
+       [--seed 1] [--aqe]
 """
 
 from __future__ import annotations
 
+import argparse
+import contextlib
 import os
+import shutil
+import statistics
 import sys
+import tempfile
 import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    cycles = int(sys.argv[1]) if len(sys.argv) > 1 else 3
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--cycles", type=int, default=10)
+    ap.add_argument("--rounds", type=int, default=3)
+    ap.add_argument("--seed", type=int, default=1)
+    ap.add_argument("--aqe", action="store_true")
+    args = ap.parse_args()
 
-    from extractor_spark.spark import caches
-    from extractor_spark.spark.queries import _webgraph_pages
+    from perfbench import corpus
+    from perfbench.workloads import TRUST_SEEDS, LlmCurate
+
+    from extractor_spark.spark import caches, webgraph
     from extractor_spark.spark.session import get_spark
-    from extractor_spark.spark.webgraph import (
-        extract_outlinks,
-        host_graph,
-        pagerank,
-        spam_mass_ranks,
-        trustrank,
-    )
-    from pyspark.sql import functions as F
 
-    spark = get_spark("probe_spam_threads")
+    spark = get_spark("probe_spam_threads", cpus=len(os.sched_getaffinity(0)))
+    work = tempfile.mkdtemp(prefix="probe_spam_")
+    pages_path = os.path.join(work, "pages")
+    corpus.write_corpus(spark, pages_path, args.seed, LlmCurate.n_pages, LlmCurate.recrawls)
+    pages = spark.read.parquet(pages_path).select("url", "html")
+    edges = webgraph.host_graph(webgraph.extract_outlinks(pages)).localCheckpoint()
+    rounds = args.rounds
+    shipped_conf = webgraph.scoped_loop_conf
 
-    pages = _webgraph_pages(spark)
-    edges = host_graph(extract_outlinks(pages)).localCheckpoint()
-    seeds = (
-        edges.select(F.col("src_host").alias("host"))
-        .unionAll(edges.select(F.col("dst_host").alias("host")))
-        .distinct()
-        .where(F.pmod(F.xxhash64("host"), F.lit(4)) == 0)
-    )
+    def rows(df):
+        return sorted(tuple(map(repr, r)) for r in df.collect())
 
-    def collect_sorted(pr, tr):
-        out = sorted(
-            tuple(map(repr, r))
-            for r in pr.join(tr.withColumnRenamed("rank", "tr"), "host").collect()
-        )
+    def phase(sequential: bool) -> dict:
+        out = {
+            "pagerank": rows(webgraph.pagerank(edges, max_iter=rounds, tol=0.0)),
+            "hits": rows(webgraph.hits(edges, max_iter=rounds)),
+        }
+        if sequential:
+            pr = webgraph.pagerank(edges, max_iter=rounds, tol=0.0)
+            tr = webgraph.trustrank(edges, TRUST_SEEDS, max_iter=rounds, tol=0.0)
+        else:
+            pr, tr = webgraph.spam_mass_ranks(edges, TRUST_SEEDS, max_iter=rounds, tol=0.0)
+        out["spam_mass.pagerank"], out["spam_mass.trustrank"] = rows(pr), rows(tr)
         caches.retire_all()
         return out
 
-    def run_seq():
-        pr = pagerank(edges, max_iter=20, tol=1e-9)
-        tr = trustrank(edges, seeds, max_iter=20, tol=1e-9)
-        return collect_sorted(pr, tr)
+    def codegen_on(spark, n_parts, codegen=True):
+        return shipped_conf(spark, n_parts, codegen=True)
 
-    def run_thr():
-        pr, tr = spam_mass_ranks(edges, seeds, max_iter=20, tol=1e-9)
-        return collect_sorted(pr, tr)
+    @contextlib.contextmanager
+    def aqe_on(spark, n_parts, codegen=True):
+        with shipped_conf(spark, n_parts, codegen):
+            spark.conf.set("spark.sql.adaptive.enabled", "true")
+            yield  # the shipped scope restores the caller's AQE setting
 
-    # warmup one of each (untimed)
-    ref = run_seq()
-    assert run_thr() == ref, "threaded != sequential on warmup"
+    arms = {
+        "threads": (shipped_conf, False),
+        "sequential": (shipped_conf, True),
+        "codegen": (codegen_on, False),
+    }
+    if args.aqe:
+        arms["aqe"] = (aqe_on, False)
 
-    seq_t, thr_t = [], []
-    for c in range(cycles):
-        t0 = time.time()
-        out = run_seq()
-        seq_t.append(round(time.time() - t0, 3))
-        assert out == ref
-        t0 = time.time()
-        out = run_thr()
-        thr_t.append(round(time.time() - t0, 3))
-        assert out == ref, f"threaded output diverged on cycle {c}"
-        print(f"cycle {c}: seq {seq_t[-1]}  thr {thr_t[-1]}", flush=True)
+    def run(arm: str) -> tuple[float, dict]:
+        conf, sequential = arms[arm]
+        webgraph.scoped_loop_conf = conf
+        try:
+            t0 = time.perf_counter()
+            out = phase(sequential)
+            return time.perf_counter() - t0, out
+        finally:
+            webgraph.scoped_loop_conf = shipped_conf
 
-    print(f"sequential: {seq_t} (best {min(seq_t)})")
-    print(f"threaded:   {thr_t} (best {min(thr_t)})")
-    print("outputs bit-identical across all cycles")
+    _, ref = run("threads")  # warm-up, untimed
+    for arm in arms:
+        run(arm)
+    times: dict[str, list[float]] = {arm: [] for arm in arms}
+    for cycle in range(args.cycles):
+        for arm in arms:
+            s, out = run(arm)
+            times[arm].append(s)
+            if arm == "aqe":
+                n_diff = {
+                    k: sum(a != b for ra, rb in zip(ref[k], out[k]) for a, b in zip(ra, rb))
+                    for k in ref
+                }
+                print(f"cycle {cycle} aqe: values differing from the shipped arm {n_diff}")
+            else:
+                assert out == ref, f"{arm} output diverged on cycle {cycle}"
+        print(f"cycle {cycle}: " + "  ".join(f"{a} {t[-1]:.3f}" for a, t in times.items()), flush=True)
+
+    hosts = len(ref["pagerank"])
+    print(f"graph phase over {hosts} hosts, {rounds} rounds, {args.cycles} cycles "
+          f"({len(os.sched_getaffinity(0))} cores):")
+    for arm, t in times.items():
+        q1, med, q3 = statistics.quantiles(t, n=4)
+        print(f"  {arm:<10} median {med:.3f} s  quartiles {q1:.3f}-{q3:.3f}")
+    print("threads, sequential and codegen outputs repr-identical in every cycle")
+    spark.stop()
+    shutil.rmtree(work, ignore_errors=True)
 
 
 if __name__ == "__main__":

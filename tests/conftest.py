@@ -1,6 +1,12 @@
 import pytest
 
 
+def persistent_rdd_ids(spark) -> set:
+    """Ids of every RDD the SparkContext currently holds persisted
+    (caches and localCheckpoints alike)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 @pytest.fixture(scope="session")
 def spark():
     from extractor_spark.spark.session import get_spark

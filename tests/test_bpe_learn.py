@@ -12,6 +12,8 @@ from collections import Counter
 import pandas as pd
 import pytest
 
+from .conftest import persistent_rdd_ids
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -149,17 +151,16 @@ def test_tie_break_is_lexicographic(spark):
 
 
 def test_registry_query_deterministic_and_caches_released(spark):
-    from extractor_spark.spark import caches
     from extractor_spark.spark.queries import QUERIES
 
     fn, oracle = QUERIES["bpe_learn_merges"]
     assert oracle is None
-    before = caches.persistent_ids(spark.sparkContext)
+    before = persistent_rdd_ids(spark)
     a = [tuple(r) for r in fn(spark, SF_DIR).collect()]
     b = [tuple(r) for r in fn(spark, SF_DIR).collect()]
     assert a == b and len(a) == 24
     # the iteration loop must release every checkpoint it created
-    after = caches.persistent_ids(spark.sparkContext)
+    after = persistent_rdd_ids(spark)
     assert after <= before, "bpe loop leaked persisted blocks"
 
 

@@ -47,6 +47,7 @@ def _corpus(spark, sf_dir=SF_DIR):
 
 def _run_incremental(spark, docs, n_batches=3, threshold=0.8):
     from extractor_spark.spark.incdedup import dedup_batch
+    from extractor_spark.spark.queries import release_query_caches
 
     work = tempfile.mkdtemp(prefix="incdedup_t_")
     try:
@@ -56,7 +57,7 @@ def _run_incremental(spark, docs, n_batches=3, threshold=0.8):
             v = dedup_batch(spark, work, batch, threshold=threshold, batch_id=b)
             for r in v.collect():
                 rows[r["url"]] = (r["is_dup"], r["dup_of"])
-            v.unpersist()
+            release_query_caches()  # the verdict checkpoint
         return rows
     finally:
         shutil.rmtree(work, ignore_errors=True)

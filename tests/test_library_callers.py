@@ -25,6 +25,7 @@ ALLOWED_WITHOUT_CALLER = {
     "stream_convert_pages": "streaming extraction, kept with its incremental-convert test",
     "build_bm25_index": "stored BM25 index build; MaxScore serving is due a caller",
     "bm25_search_index": "stored BM25 index serving; MaxScore serving is due a caller",
+    "trustrank": "public seeded rank; the registry and benchmark run its loop through spam_mass_ranks",
 }
 
 

@@ -485,10 +485,13 @@ def test_trustrank_seeds_absent_from_graph(spark):
     assert trustrank(edf, ["zz.test"], max_iter=5).count() == 0
 
 
-def test_spam_mass_seeds_absent_runs_upstream_once(spark):
-    """No seed in the graph: spam_mass_ranks runs PageRank alone, and the
-    edge cache both loop preps share must survive into that loop — the
-    caller's upstream edge plan (here a counting UDF) runs exactly once."""
+@pytest.mark.parametrize("seeds", [["zz.test"], ["a.org"]], ids=["absent", "present"])
+def test_spam_mass_runs_upstream_once(spark, seeds):
+    """The edge cache both loop setups share must survive until every loop
+    is done — the caller's upstream edge plan (here a counting UDF) runs
+    exactly once.  Seeds absent: spam_mass_ranks runs PageRank alone.
+    Seeds present: the two loops run on two threads, and the first to
+    finish must not evict the cache the other may still read."""
     from pyspark.sql import functions as F
 
     from extractor_spark.spark.webgraph import spam_mass_ranks
@@ -508,14 +511,22 @@ def test_spam_mass_seeds_absent_runs_upstream_once(spark):
     edf = spark.createDataFrame(
         pairs, "src_host string, dst_host string, n int"
     ).select("src_host", "dst_host", F.udf(counted, "int")("n").alias("n_links"))
-    pr, tr = spam_mass_ranks(edf, ["zz.test"], max_iter=20, tol=0.0)
+    pr, tr = spam_mass_ranks(edf, seeds, max_iter=20, tol=0.0)
     got = {r["host"]: r["rank"] for r in pr.collect()}
-    assert tr.count() == 0
+    got_tr = {r["host"]: r["rank"] for r in tr.collect()}
     release_query_caches()
     assert calls.value == len(pairs)
-    want = numpy_pagerank({(s, d): n for s, d, n in pairs}, iters=20)
+    graph = {(s, d): n for s, d, n in pairs}
+    want = numpy_pagerank(graph, iters=20)
     for h in want:
         assert abs(got[h] - want[h]) < 1e-12, h
+    if seeds == ["zz.test"]:
+        assert got_tr == {}
+        return
+    want_tr = numpy_trustrank(graph, seeds, iters=20)
+    assert set(got_tr) == set(want_tr)
+    for h in want_tr:
+        assert abs(got_tr[h] - want_tr[h]) < 1e-12, h
 
 
 def test_spam_mass_query_wrapper(spark):
